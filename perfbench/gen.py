@@ -27,32 +27,29 @@ CANDLE_COLS = [
 ]
 CANDLE_RECORD_BYTES = 48  # mora's on-disk candle record
 
-# Request mix of the request workload (shares of the timed requests).
-REQUEST_MIX = {
-    "range": 0.22,
-    "resample": 0.15,
-    "sma": 0.12,
-    "bollinger": 0.10,
-    "asof": 0.10,
-    "timetravel": 0.11,
-    "write": 0.10,
-    "ann": 0.10,
-}
+# Request kinds of the request workload. The mix is a benchmark choice,
+# not measured traffic (the repository records none): every timed pass
+# issues each kind once, in a seeded order, so each kind weighs the same.
+KINDS = ("range", "timetravel", "resample", "sma", "bollinger", "asof",
+         "write", "ann")
+# Untimed passes of the whole mix on throwaway state (the README's
+# steadiness record shows how the timed passes compare after them).
+WARMUP_PASSES = 1
 SMA_N = 20
 BB_N = 20
+BB_K = 2.0
 ANN_K = 10
 ANN_QUERIES = 16  # query ids per ANN request
-
-
-def _exact_counts(shares: dict[str, float], n: int) -> dict[str, int]:
-    """Largest-remainder split of ``n`` by ``shares``: the mix is exact
-    for every seed, so seeds change the data, never the op counts."""
-    raw = {k: v * n for k, v in shares.items()}
-    out = {k: int(v) for k, v in raw.items()}
-    rest = sorted(raw, key=lambda k: (out[k] - raw[k], k))
-    for k in rest[: n - sum(out.values())]:
-        out[k] += 1
-    return out
+N_VEC = 2000
+DIM = 64
+# Every read asks for a series' latest data: a fixed-length window that
+# ends with its newest minute, so a seed changes which series and which
+# values a request reads, never how many rows. The long window reaches
+# back across the year boundary, into the series' 2023 partition.
+READ_MIN, LONG_READ_MIN = 360, 1440
+# An upsert revises candles of the series' last 6 h and appends new
+# minutes, so the merge rewrites files that earlier commits wrote.
+UPSERT_LATE, UPSERT_NEW = 60, 30
 
 
 # --------------------------------------------------------------------
@@ -114,86 +111,85 @@ class RequestWorkload:
     seed: int
     codes: list[str]
     setup_batches: list[pd.DataFrame]
-    vectors: np.ndarray  # float32 (n, dim)
+    vectors: np.ndarray  # float32 (N_VEC, DIM)
     labels: np.ndarray
-    requests: list[dict]
+    requests: list[dict]  # timed passes, each with a "pass" number
     warmup: list[dict]
     # version -> reference candle state after that commit
     snapshots: dict[int, pd.DataFrame] = field(default_factory=dict)
 
 
-def _window(rng, end: pd.Timestamp, lo_min: int, hi_min: int, first):
-    """A [start, end) window biased toward recent data: its end sits an
-    exponential distance (mean 2 h) before the series' newest minute."""
-    back = int(min(rng.exponential(120), 600))
-    e = max(end - MINUTE * back, first + MINUTE * lo_min)
-    length = int(rng.integers(lo_min, hi_min + 1))
-    s = max(first, e - MINUTE * length)
-    return s, e
+def _window(newest: pd.Timestamp, minutes: int, first: pd.Timestamp):
+    """The [start, end) window of the last ``minutes`` minutes up to and
+    including ``newest``, clipped to the store's first minute."""
+    e = newest + MINUTE
+    return max(first, e - MINUTE * minutes), e
 
 
-def _requests(rng, kinds, codes, ends, first, n_vec, version, last_close,
-              state):
-    """A seeded request sequence of ``kinds`` (shuffled); write requests
-    advance ``state``, ``ends`` and ``version`` as the store will.
-    Returns (requests, {version: state})."""
-    kinds = [kinds[i] for i in rng.permutation(len(kinds))]
+def _requests(rng, passes, codes, ends, first, version, last_close, state):
+    """``passes`` passes over :data:`KINDS`, each in a seeded order;
+    write requests advance ``state``, ``ends`` and ``version`` as the
+    store will. Time travel reads ``version``, the state the sequence
+    starts from. Returns (requests, {version: state})."""
+    base = version
     snaps = {}
     out = []
-    for kind in kinds:
-        code = codes[int(rng.integers(len(codes)))]
-        r = {"kind": kind, "code": code}
-        if kind in ("range", "timetravel"):
-            r["start"], r["end"] = _window(rng, ends[code], 30, 360, first)
-        elif kind in ("resample", "sma", "bollinger"):
-            r["start"], r["end"] = _window(rng, ends[code], 120, 720, first)
-        elif kind == "asof":
-            s, e = _window(rng, ends[code], 60, 360, first)
-            r["start"], r["end"] = s, e
-            span = int((e - s).total_seconds())
-            offs = np.sort(rng.choice(span, size=50, replace=False))
-            r["trades"] = [
-                (int(i), s + pd.Timedelta(seconds=int(o)),
-                 float(np.round(rng.uniform(1, 10), 2)))
-                for i, o in enumerate(offs)
-            ]
-        if kind == "timetravel":
-            r["version"] = int(rng.integers(1, version + 1))
-        elif kind == "write":
-            # 60 late revisions in the series' last 6 h + 30 new minutes
-            cur = state[state["code"] == code]
-            recent = cur[cur["ts"] >= ends[code] - MINUTE * 360]
-            late = _revise(rng, recent.sample(60, random_state=rng))
-            new = _candles(rng, [code], ends[code] + MINUTE, 30,
-                           last_close)
-            batch = pd.concat([late, new], ignore_index=True)
-            r["batch"] = batch
-            ends[code] = ends[code] + MINUTE * 30
-            state = lww(state, batch)
-            version += 1
-            snaps[version] = state
-        elif kind == "ann":
-            r["query_ids"] = sorted(
-                int(x) for x in rng.choice(n_vec, ANN_QUERIES, replace=False)
-            )
-            # every other ANN request filters on a label, the first too
-            n_ann = sum(x["kind"] == "ann" for x in out)
-            r["label"] = None if n_ann % 2 else int(rng.integers(0, 4))
-        out.append(r)
+    for p in range(passes):
+        for i in rng.permutation(len(KINDS)):
+            kind = KINDS[i]
+            code = codes[int(rng.integers(len(codes)))]
+            r = {"kind": kind, "code": code, "pass": p}
+            if kind in ("range", "timetravel"):
+                r["start"], r["end"] = _window(ends[code], READ_MIN, first)
+            elif kind in ("resample", "sma", "bollinger"):
+                r["start"], r["end"] = _window(ends[code], LONG_READ_MIN,
+                                               first)
+            elif kind == "asof":
+                s, e = _window(ends[code], READ_MIN, first)
+                r["start"], r["end"] = s, e
+                span = int((e - s).total_seconds())
+                offs = np.sort(rng.choice(span, size=50, replace=False))
+                r["trades"] = [
+                    (int(j), s + pd.Timedelta(seconds=int(o)),
+                     float(np.round(rng.uniform(1, 10), 2)))
+                    for j, o in enumerate(offs)
+                ]
+            if kind == "timetravel":
+                r["version"] = base
+            elif kind == "write":
+                cur = state[state["code"] == code]
+                recent = cur[cur["ts"] >= ends[code] - MINUTE * 360]
+                late = _revise(rng, recent.sample(UPSERT_LATE,
+                                                  random_state=rng))
+                new = _candles(rng, [code], ends[code] + MINUTE, UPSERT_NEW,
+                               last_close)
+                batch = pd.concat([late, new], ignore_index=True)
+                r["batch"] = batch
+                ends[code] = ends[code] + MINUTE * UPSERT_NEW
+                state = lww(state, batch)
+                version += 1
+                snaps[version] = state
+            elif kind == "ann":
+                # filtered search: the label predicate rides the
+                # candidate scan, so the unfiltered path is a subset
+                r["query_ids"] = sorted(
+                    int(x) for x in rng.choice(N_VEC, ANN_QUERIES,
+                                               replace=False)
+                )
+                r["label"] = int(rng.integers(0, 4))
+            out.append(r)
     return out, snaps
 
 
 def request_workload(
     seed: int,
-    n_requests: int,
+    passes: int,
     n_codes: int = 8,
     setup_batches: int = 2,
     batch_minutes: int = 720,
-    n_vec: int = 2000,
-    dim: int = 64,
 ) -> RequestWorkload:
-    """``n_requests`` timed requests in the exact :data:`REQUEST_MIX`,
-    and a warm-up of one request of each kind."""
+    """``passes`` timed passes over :data:`KINDS` and
+    :data:`WARMUP_PASSES` warm-up passes."""
     rng = np.random.default_rng([seed, 1])
     codes = [f"C{i:02d}" for i in range(n_codes)]
     last_close = {c: float(rng.uniform(50, 150)) for c in codes}
@@ -213,19 +209,17 @@ def request_workload(
 
     # 64 components: with 16 the IVF recall swung 0.68-0.92 across
     # seeds (cell/cluster alignment); 64 holds it within a few percent
-    centers = rng.normal(0, 1, (64, dim))
-    member = rng.integers(0, 64, n_vec)
-    vecs = (centers[member] + 0.6 * rng.normal(0, 1, (n_vec, dim)))
+    centers = rng.normal(0, 1, (64, DIM))
+    member = rng.integers(0, 64, N_VEC)
+    vecs = (centers[member] + 0.6 * rng.normal(0, 1, (N_VEC, DIM)))
     vecs = vecs.astype(np.float32)
-    labels = rng.integers(0, 4, n_vec).astype(np.int32)
+    labels = rng.integers(0, 4, N_VEC).astype(np.int32)
 
     wrng = np.random.default_rng([seed, 2])
-    warm, _ = _requests(wrng, list(REQUEST_MIX), codes, dict(ends), T0,
-                        n_vec, setup_batches, dict(last_close), state)
-    timed = [k for k, c in _exact_counts(REQUEST_MIX, n_requests).items()
-             for _ in range(c)]
-    reqs, more = _requests(rng, timed, codes, ends, T0, n_vec,
-                           setup_batches, last_close, state)
+    warm, _ = _requests(wrng, WARMUP_PASSES, codes, dict(ends), T0,
+                        setup_batches, dict(last_close), state)
+    reqs, more = _requests(rng, passes, codes, ends, T0, setup_batches,
+                           last_close, state)
     snaps.update(more)
     return RequestWorkload(seed, codes, batches, vecs, labels, reqs, warm,
                            snaps)
@@ -262,10 +256,10 @@ def ref_sma(rows: pd.DataFrame, n: int) -> np.ndarray:
     return rows["close"].rolling(n).mean().to_numpy()
 
 
-def ref_bollinger(rows: pd.DataFrame, n: int, k: float = 2.0):
+def ref_bollinger(rows: pd.DataFrame, n: int):
     mid = rows["close"].rolling(n).mean().round(6)
     sd = rows["close"].rolling(n).std(ddof=1).round(6)
-    return mid.to_numpy(), sd.to_numpy(), (mid + k * sd).round(6).to_numpy()
+    return mid.to_numpy(), sd.to_numpy(), (mid + BB_K * sd).round(6).to_numpy()
 
 
 def ref_asof(rows: pd.DataFrame, trades: list) -> np.ndarray:
@@ -280,16 +274,15 @@ def ref_asof(rows: pd.DataFrame, trades: list) -> np.ndarray:
     return m.sort_values("trade_id")["close"].to_numpy()
 
 
-def ref_topk(vecs, labels, query_ids, k, label=None) -> dict[int, list]:
+def ref_topk(vecs, labels, query_ids, k, label) -> dict[int, list]:
     """Exact cosine top-k (scores rounded to 6 dp, ties by id), over
-    every vector except the request's own query ids — the candidate set
-    ``ivfpq_index_topk`` defines."""
+    every vector with ``label`` except the request's own query ids — the
+    candidate set ``ivfpq_index_topk`` defines."""
     x = vecs.astype(np.float64)
     unit = x / np.linalg.norm(x, axis=1, keepdims=True)
     ok = np.ones(len(x), bool)
     ok[query_ids] = False
-    if label is not None:
-        ok &= labels == label
+    ok &= labels == label
     ids = np.flatnonzero(ok)
     out = {}
     for q in query_ids:
@@ -314,9 +307,13 @@ MALFORMED = [
     "plain text, not a record",
 ]
 DEDUP_THRESHOLD = 0.8
-# Shares of a shard's well-formed docs.
-DOC_MIX = {"unique": 0.6, "stream_dup": 0.25, "exact_dup": 0.05,
-           "gate_fail": 0.1}
+NEAR_DUP_MIN_J = 0.85  # planted near-dups stay clearly above the threshold
+# Planted kinds of a shard's well-formed docs, in equal counts: a choice
+# that exercises every path of the pipeline, not a measured corpus.
+DOC_KINDS = ("unique", "stream_dup", "exact_dup", "gate_fail")
+WARMUP_SHARDS = 2  # untimed micro-batches on throwaway sink state
+VOCAB = 4000
+ZIPF_S = 1.1
 
 
 def tokens(text: str) -> list[str]:
@@ -357,11 +354,11 @@ class CurateWorkload:
 
 
 class _Docs:
-    def __init__(self, rng, vocab=4000, zipf_s=1.1):
+    def __init__(self, rng):
         self.rng = rng
-        p = 1.0 / np.arange(1, vocab + 1) ** zipf_s
+        p = 1.0 / np.arange(1, VOCAB + 1) ** ZIPF_S
         self.p = p / p.sum()
-        self.vocab = np.array([f"w{i}" for i in range(vocab)])
+        self.vocab = np.array([f"w{i}" for i in range(VOCAB)])
 
     def _zipf(self, n):
         return list(self.vocab[self.rng.choice(len(self.vocab), n,
@@ -378,8 +375,9 @@ class _Docs:
         order = self.rng.permutation(len(toks))
         return " ".join(toks[i] for i in order)
 
-    def near_dup(self, text, min_j=0.85):
-        """Replace two shared-vocabulary tokens; keeps Jaccard >= min_j."""
+    def near_dup(self, text):
+        """Replace two shared-vocabulary tokens; keeps Jaccard >=
+        :data:`NEAR_DUP_MIN_J`."""
         toks = text.split(" ")
         shared = [i for i, t in enumerate(toks) if t.startswith("w")]
         while True:
@@ -387,7 +385,7 @@ class _Docs:
             for i in self.rng.choice(shared, 2, replace=False):
                 out[i] = self._zipf(1)[0]
             cand = " ".join(out)
-            if cand != text and jaccard(cand, text) >= min_j:
+            if cand != text and jaccard(cand, text) >= NEAR_DUP_MIN_J:
                 return cand
 
 
@@ -406,13 +404,15 @@ def _line(doc_id, text):
 
 
 def _stream(rng, docs, n_shards, per_shard, id0, kind, shard_of):
-    counts = _exact_counts(DOC_MIX, per_shard)
+    if per_shard % len(DOC_KINDS):
+        raise ValueError(f"per_shard must be a multiple of {len(DOC_KINDS)}")
+    n_kind = per_shard // len(DOC_KINDS)
     uniques: list[tuple[int, str]] = []
     shards, malformed = [], []
     for s in range(n_shards):
         lines = []
         nid = id0 + s * 10_000
-        for _ in range(counts["unique"]):
+        for _ in range(n_kind):
             text = docs.make(nid)
             ok, q = passes_gate(text)
             if not ok or abs(q - 0.5) < 0.02:
@@ -423,8 +423,7 @@ def _stream(rng, docs, n_shards, per_shard, id0, kind, shard_of):
             lines.append(_line(nid, text))
             kind[nid], shard_of[nid] = "unique", s
             nid += 1
-        plan = (["stream_dup"] * counts["stream_dup"]
-                + ["exact_dup"] * counts["exact_dup"])
+        plan = ["stream_dup"] * n_kind + ["exact_dup"] * n_kind
         for k in plan:
             # a copy of an earlier unique (smaller id, same or earlier
             # shard), so the copy is the one dedup drops
@@ -433,7 +432,7 @@ def _stream(rng, docs, n_shards, per_shard, id0, kind, shard_of):
             lines.append(_line(nid, text))
             kind[nid], shard_of[nid] = k, s
             nid += 1
-        for j in range(counts["gate_fail"]):
+        for j in range(n_kind):
             if j % 2:
                 text = docs.make(nid, n_zipf=4, n_unique=4)  # < 20 tokens
             else:
@@ -454,14 +453,13 @@ def curate_workload(
     seed: int,
     n_shards: int,
     per_shard: int = 100,
-    warmup_shards: int = 1,
 ) -> CurateWorkload:
     rng = np.random.default_rng([seed, 3])
     kind, shard_of = {}, {}
     shards, malformed = _stream(rng, _Docs(rng), n_shards, per_shard,
                                 100_000, kind, shard_of)
     wrng = np.random.default_rng([seed, 4])
-    warm, _ = _stream(wrng, _Docs(wrng), warmup_shards, per_shard,
+    warm, _ = _stream(wrng, _Docs(wrng), WARMUP_SHARDS, per_shard,
                       900_000, {}, {})
     return CurateWorkload(seed, shards, warm, kind, shard_of, malformed)
 

@@ -22,6 +22,7 @@ import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import platform  # noqa: E402
+import re  # noqa: E402
 import resource  # noqa: E402
 import shutil  # noqa: E402
 import statistics  # noqa: E402
@@ -32,9 +33,10 @@ from concurrent.futures import ThreadPoolExecutor  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Span name prefix -> the layer its Spark jobs are attributed to.
+# Layers Spark job time is attributed to (spark.job_ms.<layer>).
 JOB_LAYERS = ("engine.store", "operators", "llm.dedup", "llm.simsearch",
-              "parallel")
+              "parallel", "streaming")
+_PROGRAM_FILE = re.compile(r"mora_spark/([\w/]+)\.py")
 
 
 def cpu_probe_mb_s() -> float:
@@ -85,6 +87,22 @@ def _git_head() -> str:
     return r.stdout.strip() or "none"
 
 
+def code_digest() -> str:
+    """sha256 over the benchmark's and the program's Python sources: runs
+    with equal digests ran the same code, also outside a git checkout."""
+    h = hashlib.sha256()
+    for top in ("perfbench", "mora_spark"):
+        for d, dirs, fs in sorted(os.walk(os.path.join(ROOT, top))):
+            dirs.sort()
+            for f in sorted(fs):
+                if f.endswith(".py"):
+                    p = os.path.join(d, f)
+                    h.update(os.path.relpath(p, ROOT).encode())
+                    with open(p, "rb") as fh:
+                        h.update(fh.read())
+    return h.hexdigest()[:16]
+
+
 def _env(work: str) -> None:
     """Keep Spark's scratch space inside the checkout."""
     tmp = os.path.join(work, "tmp")
@@ -123,20 +141,36 @@ def _nested_in_same(s, by_id) -> bool:
     return False
 
 
-def _job_layers(spans) -> dict:
-    """spark.job_ms.<layer>: job time by the span that issued it."""
-    out = {f"spark.job_ms.{k}": 0.0
-           for k in JOB_LAYERS + ("streaming", "request", "unattributed")}
-    for s in spans:
-        if s["kind"] != "job":
-            continue
-        layer = s["layer"]
-        key = next((k for k in JOB_LAYERS if layer.startswith(k)), None)
+def _layer_of(name: str):
+    return next((k for k in JOB_LAYERS
+                 if name == k or name.startswith(k + ".")), None)
+
+
+def job_layer(job: dict) -> str:
+    """The layer a job is charged to: the program module its call site
+    names, when PySpark recorded one inside ``mora_spark``; else the
+    span that encloses it (``job["layer"]`` after ``Tracer.link``)."""
+    m = _PROGRAM_FILE.search(job.get("call_site") or "")
+    key = _layer_of(m.group(1).replace("/", ".")) if m else None
+    if key is None:
+        enclosing = job["layer"]
+        key = _layer_of(enclosing)
         if key is None:
-            key = ("streaming" if layer == "stream.batch"
-                   else "request" if layer.startswith("request.")
+            key = ("streaming" if enclosing == "stream.batch"
+                   else "request" if enclosing.startswith("request.")
                    else "unattributed")
-        out[f"spark.job_ms.{key}"] += s["end_ms"] - s["start_ms"]
+    return key
+
+
+def _job_layers(spans) -> dict:
+    """spark.job_ms.<layer>: job time by :func:`job_layer`."""
+    out = {f"spark.job_ms.{k}": 0.0
+           for k in JOB_LAYERS + ("request", "unattributed")}
+    for s in spans:
+        if s["kind"] == "job":
+            s["charged_to"] = job_layer(s)
+            out[f"spark.job_ms.{s['charged_to']}"] += (
+                s["end_ms"] - s["start_ms"])
     return out
 
 
@@ -202,6 +236,7 @@ def _run(a, spec, work, out_dir) -> int:
         "python": platform.python_version(),
         "master": spark.sparkContext.master,
         "git_head": _git_head(),
+        "code_digest": code_digest(),
         "cpu_probe_mb_s_before": probe_before,
     }
 
@@ -229,7 +264,7 @@ def _run(a, spec, work, out_dir) -> int:
     e2e = {
         "setup_s": (t0 - PROC_START_MS) / 1000.0,
         "items_per_s": res.items / wall_s,
-        "op_p50_ms": statistics.median(res.op_ms),
+        "op_p50_ms": res.op_p50_ms,
         "recall": res.recall,
         "bytes_per_user_byte": res.bytes_per_user_byte,
     }
@@ -267,13 +302,15 @@ def _run(a, spec, work, out_dir) -> int:
                 f.write(json.dumps(s, default=str) + "\n")
 
     # Overhead of tracing: this run against earlier untraced runs of
-    # the same workload in this checkout (metadata, not a metric).
+    # the same workload and code in this checkout (metadata, not a
+    # metric).
     hist = os.path.join(out_dir, "results.jsonl")
     if a.trace and os.path.exists(hist):
         with open(hist) as f:
             base = [r["e2e"]["items_per_s"] for r in map(json.loads, f)
                     if r["workload"] == a.workload and not r["trace"]
-                    and r["seconds"] == a.seconds and r["correct"]]
+                    and r["seconds"] == a.seconds and r["correct"]
+                    and r.get("code_digest") == meta["code_digest"]]
         if base:
             ref = statistics.median(base)
             meta["trace_overhead_pct"] = 100.0 * (
@@ -290,7 +327,8 @@ def _run(a, spec, work, out_dir) -> int:
         for m in spec[group]
     }
     correct = res.failed == 0
-    meta.update({"e2e": e2e, "layers": layers, "correct": correct,
+    meta.update({"e2e": e2e, "layers": layers, "phases": res.meta,
+                 "session_s": session_s, "correct": correct,
                  "attempted": res.attempted, "failed": res.failed,
                  "workload": a.workload})
     with open(hist, "a") as f:

@@ -25,6 +25,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 # Span kinds, outermost first: ties on identical intervals resolve so
 # an op contains its calls and a call contains its jobs.
 _LEVEL = {"op": 0, "call": 1, "job": 2}
+PROGRESS_TIMEOUT_S = 30.0
 
 
 def now_ms() -> float:
@@ -51,7 +52,7 @@ class Tracer:
         return s
 
     @contextlib.contextmanager
-    def call(self, name, **attrs):
+    def call(self, name):
         """A call span around one call into a program layer."""
         if not self.enabled:
             yield
@@ -60,7 +61,7 @@ class Tracer:
         try:
             yield
         finally:
-            self.add(name, "call", t0, now_ms(), **attrs)
+            self.add(name, "call", t0, now_ms())
 
     def wrap(self, owner, attr: str, name: str) -> None:
         """Replace ``owner.attr`` with a spanned version (traced runs
@@ -168,11 +169,11 @@ class ProgressLog(StreamingQueryListener):
         with self._lock:
             self.terminated.add(str(event.runId))
 
-    def wait(self, index: int, n_batches: int, timeout_s: float = 30.0):
+    def wait(self, index: int, n_batches: int):
         """Block until the ``index``-th query's termination and
         ``n_batches`` progress records have been delivered (the
         listener bus is asynchronous); returns its batch records."""
-        deadline = time.monotonic() + timeout_s
+        deadline = time.monotonic() + PROGRESS_TIMEOUT_S
         while time.monotonic() < deadline:
             with self._lock:
                 if len(self.started) > index:

@@ -30,14 +30,14 @@ TINY_DOCS = dict(per_shard=20)
 
 
 def test_same_seed_gives_identical_inputs():
-    assert gen.digest(gen.request_workload(7, 30)) == gen.digest(
-        gen.request_workload(7, 30))
+    assert gen.digest(gen.request_workload(7, 2)) == gen.digest(
+        gen.request_workload(7, 2))
     assert gen.digest(gen.curate_workload(7, 2)) == gen.digest(
         gen.curate_workload(7, 2))
 
 
 def test_other_seed_changes_inputs_not_planted_counts():
-    a, b = gen.request_workload(7, 30), gen.request_workload(8, 30)
+    a, b = gen.request_workload(7, 2), gen.request_workload(8, 2)
     assert gen.digest(a) != gen.digest(b)
     assert Counter(r["kind"] for r in a.requests) == Counter(
         r["kind"] for r in b.requests)
@@ -51,12 +51,13 @@ def test_other_seed_changes_inputs_not_planted_counts():
     assert [len(s) for s in c.shards] == [len(s) for s in d.shards]
 
 
-def test_request_mix_is_exact():
-    w = gen.request_workload(3, 50)
-    got = Counter(r["kind"] for r in w.requests)
-    assert sum(got.values()) == 50
-    for kind, share in gen.REQUEST_MIX.items():
-        assert abs(got[kind] - share * 50) < 1
+def test_every_pass_issues_each_kind_once():
+    w = gen.request_workload(3, 3)
+    for p in range(3):
+        kinds = [r["kind"] for r in w.requests if r["pass"] == p]
+        assert sorted(kinds) == sorted(gen.KINDS)
+    assert sorted(r["kind"] for r in w.warmup) == sorted(
+        gen.KINDS * gen.WARMUP_PASSES)
 
 
 def test_planted_uniques_stay_below_threshold():
@@ -148,7 +149,7 @@ def test_request_references_agree_with_program(spark, tmp_path):
     ctx, _ = _ctx(spark, tmp_path, TINY_REQ)
     res = run_requests(ctx)
     assert res.failed == 0
-    assert res.attempted == 20
+    assert res.attempted == len(gen.KINDS)
     assert 0.0 < res.recall <= 1.0
 
 
@@ -167,7 +168,7 @@ def test_checks_reject_wrong_answers():
     import pandas as pd
     from workloads import check_request
 
-    w = gen.request_workload(4, 40, **TINY_REQ)
+    w = gen.request_workload(4, 2, **TINY_REQ)
     state = w.snapshots[TINY_REQ["setup_batches"]]
     r = next(x for x in w.requests if x["kind"] == "range")
     rows = gen.ref_range(state, r["code"], r["start"], r["end"])

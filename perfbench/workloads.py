@@ -23,8 +23,8 @@ from spans import ProgressLog, Tracer, now_ms
 # Run length: ops per --seconds, calibrated on a 4-core host so the
 # timed phase lasts about --seconds there. Fixed per (seed, seconds) —
 # never adapted to the measured speed, because cost follows state.
-REQUESTS_PER_S = 1.5
-CURATE_S_PER_BATCH = 5.0
+REQUEST_S_PER_PASS = 6.5
+CURATE_S_PER_BATCH = 6.5
 
 # Floors catch a broken index or dedup, not tuning: over 32-48 queries
 # recall@10 read 0.84-1.0 across seeds; planted-dup recall read 1.0.
@@ -50,10 +50,11 @@ class Result:
     attempted: int
     failed: int
     timed_ms: tuple[float, float]  # wall clock [t0, t1]
-    op_ms: list[float]
+    op_p50_ms: float
     recall: float
     bytes_per_user_byte: float
     layers: dict = field(default_factory=dict)
+    meta: dict = field(default_factory=dict)  # recorded, never printed
 
 
 def du(*paths) -> int:
@@ -155,11 +156,10 @@ class _Client:
                 self.store.write(batch, mode="merge")
             return None
         if k == "ann":
-            pred = None if r["label"] is None else f"label = {r['label']}"
             with self.tr.call("llm.simsearch.topk_plan"):
                 df = ivfpq_index_topk(
                     self.spark, self.ann_path, r["query_ids"], k=gen.ANN_K,
-                    predicate=pred,
+                    predicate=f"label = {r['label']}",
                 )
             return self._consume("llm.simsearch.topk_exec", df)
         raise ValueError(f"unknown request kind {k}")
@@ -205,8 +205,7 @@ def check_request(w, r, got, state):
             ids = got[got["query_id"] == q].sort_values("rank")
             ids = ids["neighbor_id"].tolist()
             ok &= len(ids) == gen.ANN_K and len(set(ids)) == gen.ANN_K
-            if r["label"] is not None:
-                ok &= bool(np.all(w.labels[ids] == r["label"]))
+            ok &= bool(np.all(w.labels[ids] == r["label"]))
             hits += len(set(ids) & set(ref[q]))
             total += gen.ANN_K
         return ok, hits, total
@@ -238,21 +237,26 @@ def check_request(w, r, got, state):
     raise ValueError(k)
 
 
+def geomean(xs) -> float:
+    return float(np.exp(np.mean(np.log(xs))))
+
+
 def run_requests(ctx: Ctx) -> Result:
     from mora_spark.engine import CandleStore
     from mora_spark.llm.simsearch import build_ivfpq_index, save_ivfpq_index
 
     spark, tr = ctx.spark, ctx.tracer
-    n = max(20, round(ctx.seconds * REQUESTS_PER_S))
-    w = gen.request_workload(ctx.seed, n, **ctx.sizes)
+    passes = max(1, round(ctx.seconds / REQUEST_S_PER_PASS))
+    w = gen.request_workload(ctx.seed, passes, **ctx.sizes)
     store_path = os.path.join(ctx.work, "store")
     store = CandleStore(spark, store_path)
-    layers = {}
+    layers, phases = {}, {}
 
     t = time.perf_counter()
     for b in w.setup_batches:
         store.write(spark.createDataFrame(b, CANDLE_DDL), mode="merge")
-    layers["engine.store.setup_write_ms"] = (time.perf_counter() - t) * 1e3
+    phases["store_s"] = time.perf_counter() - t
+    layers["engine.store.setup_write_ms"] = phases["store_s"] * 1e3
 
     ann_path = os.path.join(ctx.work, "ann")
     t = time.perf_counter()
@@ -262,10 +266,12 @@ def run_requests(ctx: Ctx) -> Result:
         "vec_id long, embedding array<float>, label int",
     )
     save_ivfpq_index(*build_ivfpq_index(vecs), ann_path)
-    layers["llm.simsearch.index_build_ms"] = (time.perf_counter() - t) * 1e3
+    phases["ann_index_s"] = time.perf_counter() - t
+    layers["llm.simsearch.index_build_ms"] = phases["ann_index_s"] * 1e3
 
-    # Warm-up: the same request kinds on a throwaway copy of the store
+    # Warm-up: passes of the mix on a throwaway copy of the store
     # (writes land there), read-only against the real ANN index.
+    t = time.perf_counter()
     warm_path = os.path.join(ctx.work, "store_warmup")
     shutil.copytree(store_path, warm_path)
     quiet = Tracer(False)
@@ -273,6 +279,7 @@ def run_requests(ctx: Ctx) -> Result:
     for r in w.warmup:
         warm.do(r)
     clear_memos(spark)
+    phases["warmup_s"] = time.perf_counter() - t
 
     client = _Client(spark, tr, store, ann_path)
     data = os.path.join(store_path, "data")
@@ -336,17 +343,25 @@ def run_requests(ctx: Ctx) -> Result:
         "engine.store.log_bytes": du(log),
         "engine.store.read_files": client.read_files,
     })
-    for kind, xs in per_kind.items():
-        layers[f"request.{kind}_p50_ms"] = statistics.median(xs)
+    p50 = {kind: statistics.median(xs) for kind, xs in per_kind.items()}
+    for kind, v in p50.items():
+        layers[f"request.{kind}_p50_ms"] = v
+    # Per pass, the geometric mean latency of its requests: level when
+    # the warm-up has taken the cold transient out of the timed phase.
+    phases["pass_ms"] = [
+        geomean([ms for r, ms in zip(w.requests, op_ms) if r["pass"] == p])
+        for p in range(passes)
+    ]
     return Result(
         items=len(w.requests),
         attempted=len(w.requests),
         failed=min(failed, len(w.requests)),
         timed_ms=(t0, t1),
-        op_ms=op_ms,
+        op_p50_ms=geomean(list(p50.values())),
         recall=recall,
         bytes_per_user_byte=du(data, log) / user,
         layers=layers,
+        meta=phases,
     )
 
 
@@ -388,7 +403,7 @@ def run_curate(ctx: Ctx) -> Result:
     spark, tr = ctx.spark, ctx.tracer
     n_shards = max(2, round(ctx.seconds / CURATE_S_PER_BATCH))
     w = gen.curate_workload(ctx.seed, n_shards, **ctx.sizes)
-    layers = {}
+    layers, phases = {}, {}
 
     template = spark.createDataFrame([], DOCUMENT_SCHEMA)
     warm_src = os.path.join(ctx.work, "warm_src")
@@ -397,12 +412,16 @@ def run_curate(ctx: Ctx) -> Result:
     user_bytes = _write_shards(w.shards, src)
 
     # Warm-up: the same pipeline over throwaway shards and sink state.
+    t = time.perf_counter()
     stream_curate_jsonl(
         spark, warm_src, os.path.join(ctx.work, "warm"), template,
         threshold=gen.DEDUP_THRESHOLD, gate=_gate,
     )
-    ctx.progress.wait(0, len(w.warmup_shards))
+    warm = ctx.progress.wait(0, len(w.warmup_shards))
     clear_memos(spark)
+    phases["warmup_s"] = time.perf_counter() - t
+    phases["warmup_trigger_ms"] = [
+        b["duration"]["triggerExecution"] for b in warm]
 
     out = os.path.join(ctx.work, "curate")
     failed = 0
@@ -419,6 +438,7 @@ def run_curate(ctx: Ctx) -> Result:
 
     batches = ctx.progress.wait(1, n_shards) if not failed else []
     op_ms = [b["duration"]["triggerExecution"] for b in batches]
+    phases["trigger_ms"] = op_ms
     for b in batches:
         tr.add("stream.batch", "op", b["start_ms"],
                b["start_ms"] + b["duration"]["triggerExecution"],
@@ -472,10 +492,11 @@ def run_curate(ctx: Ctx) -> Result:
         attempted=n_shards,
         failed=failed,
         timed_ms=(t0, t1),
-        op_ms=op_ms or [t1 - t0],
+        op_p50_ms=statistics.median(op_ms or [t1 - t0]),
         recall=recall,
         bytes_per_user_byte=du(*keep_dirs) / user_bytes,
         layers=layers,
+        meta=phases,
     )
 
 
