@@ -293,6 +293,45 @@ def _group_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _with_band_keys(
+    groups: DataFrame,
+    band_size: int = BAND_SIZE,
+    n_bands: int = N_HASHES // BAND_SIZE,
+) -> DataFrame:
+    """``groups`` plus ``bks``, the LSH band-key array of each token set
+    ``ti``: the md5 of each band's ``band_size`` consecutive MinHash
+    values, ``n_bands`` keys. The signature is its own column so the
+    optimizer keeps it computed once, not once per band read."""
+    return (
+        groups.withColumn("mh", _affine_minhash(F.col("ti"), band_size * n_bands))
+        .withColumn(
+            "bks",
+            F.array(
+                *[
+                    F.md5(
+                        F.concat_ws(
+                            "|",
+                            *[
+                                F.col("mh").getItem(b * band_size + i)
+                                for i in range(band_size)
+                            ],
+                        )
+                    )
+                    for b in range(n_bands)
+                ]
+            ),
+        )
+        .drop("mh")
+    )
+
+
+def _explode_bands(groups: DataFrame) -> DataFrame:
+    """One band row per (group, band) from a frame carrying ``bks``."""
+    return groups.select(
+        "gid", "bks", F.posexplode("bks").alias("band", "band_key")
+    )
+
+
 def _band_table(
     groups: DataFrame,
     band_size: int = BAND_SIZE,
@@ -304,31 +343,7 @@ def _band_table(
     default to the fixed module constants; pass
     :func:`derive_minhash_params` output for the recall-derived
     configuration."""
-    sigs = groups.withColumn(
-        "mh", _affine_minhash(F.col("ti"), band_size * n_bands)
-    )
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col("mh").getItem(b * band_size + i)
-                        for i in range(band_size)
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
-        sigs.withColumn("bks", band_keys)
-        .select(
-            "gid",
-            "bks",
-            F.posexplode("bks").alias("band", "band_key"),
-        )
-    )
+    return _explode_bands(_with_band_keys(groups, band_size, n_bands))
 
 
 def _minhash_groups_verified(
@@ -706,7 +721,7 @@ def save_minhash_index(
 def _band_keys_local(
     ti: list[int], band_size: int, n_bands: int
 ) -> list[str]:
-    """Driver-side replay of :func:`_band_table`'s band keys for ONE
+    """Driver-side replay of :func:`_with_band_keys` for ONE
     token-int array — the save-time family cross-check. Exactness
     argument: ti ints are 32-bit non-negative (``_int_tokens``), so
     Spark's ``(h / 2).cast("long")`` (double divide, truncate) equals

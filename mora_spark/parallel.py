@@ -12,6 +12,11 @@ Scope: INDEPENDENT actions only (distinct output paths, no
 happens-before). Failures propagate: the first exception re-raises in
 the caller after every thunk has settled, so a sink batch still fails
 loudly as a unit.
+
+Each pool thread runs with the caller's Spark local properties (job
+group, description, scheduler pool), so its jobs are attributed and
+cancelled with the caller's: a streaming sink's writes stay in the
+query's ``runId`` job group.
 """
 
 from __future__ import annotations
@@ -30,6 +35,12 @@ def run_concurrent(*thunks: Callable[[], None], max_workers: int = 3) -> None:
     if len(thunks) == 1:
         thunks[0]()
         return
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        thunks = tuple(map(inheritable_thread_target(session), thunks))
     with ThreadPoolExecutor(min(max_workers, len(thunks))) as pool:
         futures = [pool.submit(t) for t in thunks]
         first_exc: BaseException | None = None

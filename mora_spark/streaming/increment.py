@@ -2,20 +2,11 @@
 
 The production loop a training-data pipeline runs forever: documents
 arrive in micro-batches; each batch is deduped against the persisted
-LSH index of every EARLIER KEPT document (``llm.dedup.dedup_increment``
-— the corpus is never re-tokenized) and within itself; the batch's
+LSH index of every EARLIER KEPT document and within itself, and its
 survivors are appended to the index so later batches dedup against
-them. ``foreachBatch`` is the transactional boundary (the analogue of
-the reference's WAL append batching, ``database/storage/wal/persist.go``):
-dup pairs are materialized BEFORE the index mutates, and the index
-grows batch-atomically under the streaming checkpoint.
-
-Drop rule (exactly what the batch operators implement): a document is
-a duplicate iff it near-dups any kept doc from an earlier batch
-(``src='corpus'``) or any earlier doc in its own batch (``src='batch'``,
-regardless of whether that earlier doc itself survived). The kept set
-is therefore order-dependent by construction — which is the point:
-it reproduces what sequential ingestion actually keeps.
+them — the shared text-dedup step of
+:mod:`mora_spark.streaming.textdedup`, which also states the drop rule
+and the replay contract.
 """
 
 from __future__ import annotations
@@ -27,7 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mora_spark.datasets import load_table
-from mora_spark.parallel import run_concurrent
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -82,223 +72,42 @@ def stream_dedup_increment(
     returns the accumulated dup-pair table (doc_id, dup_id, jaccard,
     src). The kept corpus is the index's group membership afterwards.
 
-    Per micro-batch: (1) dedup the batch against the loaded index +
-    itself; (2) write the pairs (an action — the plan is fully
-    evaluated against the PRE-append index); (3) anti-join the batch
-    against its own dup ids and add the survivors' bands/groups to the
-    index. foreachBatch is at-least-once, so EVERY batch write targets
-    a deterministic ``batch_id=<n>`` subdirectory with mode=overwrite:
-    a replay after a crash anywhere in 2-3 recomputes the same pair
-    set (the index is read AS OF the earlier batches via a
-    ``batch_id < current`` snapshot filter, so rows a half- or
-    fully-finished step 3 left behind are invisible to the replayed
-    join) and overwrites, never duplicates.
-    That makes the whole sink idempotent — the streaming analogue of
-    the store's WAL-before-apply + committed-only-replay discipline.
+    Per micro-batch: the shared step
+    :func:`mora_spark.streaming.textdedup.dedup_text_batch`, whose pair
+    set lands in ``work_dir/dup_pairs/batch_id=<n>``.
 
     ``work_dir``'s index is SINK-OWNED: it must start empty (first run)
-    or contain only this sink's own ``batch_id=`` layout (restart). To
-    dedup the stream against a PREBUILT ``save_minhash_index`` corpus,
-    pass it as ``seed_index_path`` — the seed stays in its own sharded
-    layout (keeping its directory-pruned joins) and is treated as an
-    always-in-snapshot batch "-1": every micro-batch dedups against
-    seed + earlier kept streamed docs + itself, and only streamed
-    survivors are appended to the sink-owned index. Never copy a
-    sharded index INTO work_dir: mixing ``shard=`` and ``batch_id=``
-    subdirs under one parquet root breaks partition discovery.
+    or contain only this sink's own ``batch_id=`` layout (restart);
+    anything else is refused. To dedup the stream against a PREBUILT
+    ``save_minhash_index`` corpus, pass it as ``seed_index_path`` — the
+    seed keeps its sharded layout (and its directory-pruned joins) and
+    is treated as an always-in-snapshot batch "-1"; only streamed
+    survivors are appended to the sink-owned index.
     """
-    from mora_spark.llm.dedup import (
-        STREAM_BANDS_SCHEMA,
-        STREAM_GROUPS_SCHEMA,
-        build_minhash_index,
-        dedup_increment,
-        load_minhash_family,
-        load_minhash_index,
-        minhash_lsh_pairs,
-        write_minhash_family,
-    )
+    from mora_spark.streaming.ingest import _state_partitions
+    from mora_spark.streaming.textdedup import dedup_text_batch, open_text_index
 
-    index_path = os.path.join(work_dir, "lsh_index")
     pairs_dir = os.path.join(work_dir, "dup_pairs")
     ckpt = os.path.join(work_dir, "ckpt_dedup_incr")
-    seed = (
-        load_minhash_index(spark, seed_index_path)
-        if seed_index_path is not None
-        else None
+    index = open_text_index(
+        spark, work_dir, seed_index_path, "stream_dedup_increment"
     )
-    # The banding family follows the SEED index when there is one (a
-    # batch banded differently would never collide with the seed's
-    # band keys — the exact silent failure dedup_increment's guard
-    # exists for); an unseeded stream keeps whatever its own index
-    # already carries (fixed defaults on a fresh dir). If the sink
-    # already OWNS an index built with a different family, seeding is
-    # refused rather than silently re-stamped: the batches would band
-    # with the seed's family and never collide with the sink's own
-    # prior epochs — duplicates of earlier streamed docs would all
-    # come back "unique".
-    own_family = load_minhash_family(index_path)
-    if seed_index_path is not None:
-        family = load_minhash_family(seed_index_path)
-        if (
-            os.path.isdir(os.path.join(index_path, "groups"))
-            and own_family != family
-        ):
-            raise ValueError(
-                f"stream_dedup_increment: seed index family {family} "
-                f"conflicts with the existing sink-owned index's "
-                f"family {own_family} at {index_path}; compact the "
-                "old epoch with its own family (or start a fresh "
-                "work_dir) instead of mixing banding families in one "
-                "index"
-            )
-    else:
-        family = own_family
-    # Stamp the family onto the sink-owned index so the next epoch
-    # (compaction, reseeding, ad-hoc increments) recovers it from
-    # metadata instead of assuming.
-    write_minhash_family(index_path, *family)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.select("doc_id", "text")
-        # One tokenization of the batch for every index join, the
-        # within-batch self-join, and the kept index derivation; the
-        # persist lifetime is OWNED HERE (unpersisted after the writes) so
-        # cached blocks do not accumulate across micro-batches.
-        bands_b, groups_b = build_minhash_index(batch, band_size=family[0], n_bands=family[1])
-        groups_b.persist()
-        try:
-            # One corpus-pair pass per index; each keeps its native
-            # layout (the seed its shard/gshard pruning, the sink-owned
-            # index its batch_id snapshot filter), and the within-batch
-            # pairs are emitted exactly once at the end.
-            parts = []
-            if seed is not None:
-                parts.append(
-                    dedup_increment(
-                        batch, seed[0], seed[1], threshold=threshold,
-                        prebuilt=(groups_b, bands_b), include_intra=False,
-                        index_family=family,
-                    )
-                )
-            if os.path.isdir(os.path.join(index_path, "groups")):
-                # Supply the fixed sink-owned schema when the layout IS
-                # the sink's (every partition dir is batch_id=...) —
-                # skipping the per-micro-batch schema-inference job; a
-                # FOREIGN pre-existing index at index_path (sharded
-                # save, other id types) keeps inference. The listdir
-                # gate matches the local-dir assumption the isdir
-                # check above already makes.
-                own_layout = all(
-                    n.startswith("batch_id=") or n.startswith("_")
-                    for n in os.listdir(os.path.join(index_path, "groups"))
-                )
-                bands, groups = load_minhash_index(
-                    spark,
-                    index_path,
-                    bands_schema=(
-                        STREAM_BANDS_SCHEMA if own_layout else None
-                    ),
-                    groups_schema=(
-                        STREAM_GROUPS_SCHEMA if own_layout else None
-                    ),
-                )
-                # The subdir layout doubles as a snapshot filter: a
-                # replayed batch must dedup against the index AS OF the
-                # batches before it — without this, a crash after step
-                # 3 would replay the batch against its own survivors
-                # and emit spurious self/corpus pairs. Partition
-                # pruning makes it free. (The seed index has no replay
-                # exposure — its rows predate every micro-batch — so
-                # it is always in-snapshot; same for a foreign
-                # pre-existing index without the batch_id layout.)
-                if "batch_id" in bands.columns:
-                    bands = bands.where(F.col("batch_id") < batch_id)
-                    groups = groups.where(F.col("batch_id") < batch_id)
-                parts.append(
-                    dedup_increment(
-                        batch, bands, groups, threshold=threshold,
-                        prebuilt=(groups_b, bands_b), include_intra=False,
-                        index_family=family,
-                    )
-                )
-            intra = minhash_lsh_pairs(
-                batch, threshold=threshold,
-                prebuilt=(groups_b, bands_b),
-            ).select(
-                F.col("doc_b").alias("doc_id"),
-                F.col("doc_a").alias("dup_id"),
-                "jaccard",
-                F.lit("batch").alias("src"),
-            )
-            pairs = intra
-            for p in parts:
-                pairs = pairs.unionByName(p)
-            # Eager checkpoint: the pair set is fully materialized
-            # against the PRE-append index, then feeds both the result
-            # sink and the kept-set anti-join without re-evaluating the
-            # dedup plan (or re-reading the pair dir).
-            pairs = pairs.localCheckpoint(eager=True)
-            # The kept index tables derive from the BATCH tables
-            # already computed (groups_b is persisted): drop the dup
-            # ids from the member lists and semi-join the band rows —
-            # a rebuild from the kept anti-join would re-run the batch
-            # scan + tokenization + grouping a second time per
-            # micro-batch (guide §2.4). Exact equivalence with
-            # build_minhash_index(kept): gids/ti depend only on the
-            # token set, members re-collect to the sorted kept subset,
-            # groups left with no kept member drop out of the inner
-            # join — identical rows to a rebuild.
-            dropped = pairs.select("doc_id").distinct()
-            m = (
-                groups_b.select("gid", F.explode("members").alias("doc_id"))
-                .join(dropped, "doc_id", "left_anti")
-                .groupBy("gid")
-                .agg(
-                    F.sort_array(F.collect_list("doc_id")).alias("members")
-                )
-            )
-            g = (
-                groups_b.select("gid", "ti", "n")
-                .join(m, "gid")
-                .select("gid", "members", "ti", "n")
-            )
-            b = bands_b.join(g.select("gid"), "gid", "left_semi")
-            # One file per batch at fixture scale; a production stream
-            # would instead target the store's compaction cadence (many
-            # small appends, periodic rewrite — see CandleStore.compact).
-            # The three writes are independent — pairs is eagerly
-            # checkpointed above, so the index writes don't re-run the
-            # dedup plan — and overlapping them hides the per-action
-            # driver latency that dominates small batches (guide §2.6).
-            run_concurrent(
-                lambda: pairs.write.mode("overwrite").parquet(
-                    os.path.join(pairs_dir, f"batch_id={batch_id}")
-                ),
-                lambda: b.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(
-                    os.path.join(
-                        index_path, "bands", f"batch_id={batch_id}"
-                    )
-                ),
-                lambda: g.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(
-                    os.path.join(
-                        index_path, "groups", f"batch_id={batch_id}"
-                    )
-                ),
-            )
-        finally:
-            groups_b.unpersist()
+        out = os.path.join(pairs_dir, f"batch_id={batch_id}")
+        dedup_text_batch(
+            spark, batch.select("doc_id", "text"), batch_id, index,
+            threshold,
+            lambda pairs, dropped: [
+                lambda: pairs.write.mode("overwrite").parquet(out)
+            ],
+        )
 
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    from mora_spark.streaming.ingest import _state_partitions
-
     # Micro-batches are corpus-increments, not the whole corpus: size
     # the shuffles to the batch, not the session default.
     with _state_partitions(spark, 8):

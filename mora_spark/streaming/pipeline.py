@@ -1,35 +1,24 @@
 """The crawl-shaped corpus pipeline as ONE streaming job.
 
-JSONL shards in → curated corpus out, composing the independently
-verified stages end-to-end per micro-batch:
+JSONL shards in → curated corpus out, per micro-batch:
 
 1. **Quarantine**: malformed lines land in ``_corrupt_record``
    (PERMISSIVE JSONL contract, ``sources/jsonl.py``) and are diverted
    to a quarantine table instead of killing the stream mid-crawl.
 2. **Gates**: caller-supplied row-local filters (language ID, quality
    score, token floor — all scan-stage JVM HOFs).
-3. **Incremental LSH dedup**: the batch dedups against the persisted
-   index of earlier KEPT docs + itself (same greedy discipline and
-   idempotent ``batch_id=`` layout as
-   :func:`mora_spark.streaming.increment.stream_dedup_increment` —
-   exact dups are subsumed, jaccard(identical) = 1 ≥ any threshold).
+3. **Incremental LSH dedup**: the shared text-dedup step
+   (:mod:`mora_spark.streaming.textdedup`) against the seed, the
+   sink-owned index of earlier KEPT docs and the batch itself.
 4. **Curated append**: survivors land batch-atomically in a
    ``batch_id=``-partitioned curated table; downstream packing/
    sharding runs over it (the query composes
    :func:`mora_spark.llm.curation.pack_sequences`).
 
-Every per-batch write targets a deterministic ``batch_id=<n>`` subdir
-with mode=overwrite and the drop set is materialized against the
-PRE-append index, so a foreachBatch replay after a crash recomputes
-the same survivors and overwrites, never duplicates — the streaming
-analogue of the reference's WAL-before-apply + committed-only replay
-(``database/storage/wal/flusher.go:74-150``).
-
-At 100 TB: each stage is batch-sized, not corpus-sized. The index
-joins stay directory-pruned (``batch_id`` snapshot filter), the gates
-run in the scan stage, and nothing in the loop scans the accumulated
-corpus — per-batch cost tracks batch size as the curated set grows
-(the same flatness contract the continuous aggregate proves).
+Quarantine and curated writes ride the dedup step's concurrent
+``batch_id=<n>`` overwrites, so a replayed batch overwrites, never
+duplicates. Each stage is batch-sized, not corpus-sized: per-batch
+cost tracks batch size as the curated set grows.
 """
 
 from __future__ import annotations
@@ -56,18 +45,11 @@ def stream_curate_jsonl(
     ``(curated_docs, n_quarantined)`` — the kept (doc_id, text) corpus
     and the count of malformed lines diverted mid-stream.
 
-    ``n_files`` is the per-batch shard-count knob (``write_csv``'s
-    contract): every per-batch table write — quarantine, curated,
-    index bands/groups — lands as ``n_files`` parquet parts. The
-    default 1 stays a narrow ``coalesce`` (no extra shuffle — right
-    for probe-sized micro-batches); >1 is a ``repartition``, because
-    AQE may have merged the upstream shuffle into fewer partitions
-    than requested and ``coalesce`` can only reduce. At production
-    micro-batches (millions of rows) one file per table serializes
-    the write into a single task, so size it to batch_rows /
-    target_rows_per_file. Layout only — replay idempotence and the
-    snapshot filter are unchanged (the unit of overwrite is still the
-    ``batch_id=`` directory).
+    ``n_files``: parquet parts per per-batch table write (quarantine,
+    curated, index bands/groups; see ``textdedup.batch_write``). One
+    file serializes a write into one task, so at production batch
+    sizes set it to batch_rows / target_rows_per_file. Layout only:
+    the unit of overwrite stays the ``batch_id=`` directory.
 
     ``batch_stats`` (optional, probe-only): appends one
     ``{"batch_id", "rows", "wall_s"}`` dict per micro-batch so the
@@ -76,200 +58,48 @@ def stream_curate_jsonl(
     production).
 
     ``seed_index_path`` (optional): a prebuilt ``save_minhash_index``
-    corpus the stream additionally dedups against — same contract as
-    :func:`mora_spark.streaming.increment.stream_dedup_increment`'s
-    seed: always-in-snapshot (its rows predate every micro-batch, so
-    no replay exposure), its sharded layout keeps its directory-pruned
-    joins, and the BANDING FAMILY follows the seed (a recall-derived
-    index thus runs its 0.99-recall contract through this one-job
-    pipeline too). Batches band with the seed's family, so a work_dir
-    whose sink-owned index already carries a DIFFERENT family is
-    refused up front — and an unseeded run inherits whatever family
-    the sink index already carries instead of re-stamping the default
-    over it (restamping was the r14 ADVICE #4 bug: a work_dir seeded
-    by an earlier derived-family epoch would have had correct
-    metadata silently replaced)."""
-    from mora_spark.llm.dedup import (
-        STREAM_BANDS_SCHEMA,
-        STREAM_GROUPS_SCHEMA,
-        build_minhash_index,
-        dedup_increment,
-        load_minhash_family,
-        load_minhash_index,
-        minhash_lsh_pairs,
-        write_minhash_family,
-    )
+    corpus the stream additionally dedups against; the banding family
+    follows it (see :mod:`mora_spark.streaming.textdedup`)."""
     from mora_spark.sources.jsonl import CORRUPT_COL, read_jsonl_stream
     from mora_spark.streaming.ingest import _state_partitions
+    from mora_spark.streaming.textdedup import (
+        batch_write,
+        dedup_text_batch,
+        open_text_index,
+    )
 
-    def shard(df: DataFrame) -> DataFrame:
-        return df.coalesce(1) if n_files == 1 else df.repartition(n_files)
-
-    index_path = os.path.join(work_dir, "lsh_index")
     curated_dir = os.path.join(work_dir, "curated")
     quar_dir = os.path.join(work_dir, "quarantine")
     ckpt = os.path.join(work_dir, "ckpt_pipeline")
-    seed = (
-        load_minhash_index(spark, seed_index_path)
-        if seed_index_path is not None
-        else None
+    index = open_text_index(
+        spark, work_dir, seed_index_path, "stream_curate_jsonl"
     )
-    # Family resolution mirrors stream_dedup_increment: follow the
-    # seed when there is one (refusing a conflicting sink-owned
-    # index), otherwise inherit whatever the sink index already
-    # carries (fixed defaults on a fresh dir) — never overwrite an
-    # existing stamp with the default. The stamp keeps downstream
-    # consumers (compaction, ad-hoc increments) on metadata instead
-    # of assumptions.
-    own_family = load_minhash_family(index_path)
-    if seed_index_path is not None:
-        family = load_minhash_family(seed_index_path)
-        if (
-            os.path.isdir(os.path.join(index_path, "groups"))
-            and own_family != family
-        ):
-            raise ValueError(
-                f"stream_curate_jsonl: seed index family {family} "
-                f"conflicts with the existing sink-owned index's "
-                f"family {own_family} at {index_path}; start a fresh "
-                "work_dir (or compact the old epoch with its own "
-                "family) instead of mixing banding families in one "
-                "index"
-            )
-    else:
-        family = own_family
-    write_minhash_family(index_path, *family)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         import time as _time
 
-        from mora_spark.parallel import run_concurrent
-
         t0 = _time.time()
-
-        def write_quarantine() -> None:
-            shard(
-                batch.where(F.col(CORRUPT_COL).isNotNull()).select(
-                    CORRUPT_COL
-                )
-            ).write.mode("overwrite").parquet(
-                os.path.join(quar_dir, f"batch_id={batch_id}")
-            )
-
         good = batch.where(F.col(CORRUPT_COL).isNull())
         if gate is not None:
             good = gate(good)
         good = good.select("doc_id", "text")
 
-        def curate() -> None:
-            bands_b, groups_b = build_minhash_index(
-                good, band_size=family[0], n_bands=family[1]
-            )
-            groups_b.persist()
-            try:
-                parts = []
-                if seed is not None:
-                    parts.append(
-                        dedup_increment(
-                            good, seed[0], seed[1], threshold=threshold,
-                            prebuilt=(groups_b, bands_b),
-                            include_intra=False,
-                            index_family=family,
-                        )
-                    )
-                if os.path.isdir(os.path.join(index_path, "groups")):
-                    # Sink-owned layout with a FIXED schema: supplying
-                    # it skips the per-micro-batch schema-inference job
-                    # a bare read pays (see STREAM_*_SCHEMA).
-                    bands, groups = load_minhash_index(
-                        spark,
-                        index_path,
-                        bands_schema=STREAM_BANDS_SCHEMA,
-                        groups_schema=STREAM_GROUPS_SCHEMA,
-                    )
-                    # Snapshot filter: a replayed batch dedups against
-                    # the index AS OF the batches before it (see
-                    # increment.py).
-                    bands = bands.where(F.col("batch_id") < batch_id)
-                    groups = groups.where(F.col("batch_id") < batch_id)
-                    parts.append(
-                        dedup_increment(
-                            good, bands, groups, threshold=threshold,
-                            prebuilt=(groups_b, bands_b),
-                            include_intra=False,
-                            index_family=family,
-                        )
-                    )
-                dropped = minhash_lsh_pairs(
-                    good, threshold=threshold, prebuilt=(groups_b, bands_b)
-                ).select(F.col("doc_b").alias("doc_id"))
-                for p in parts:
-                    dropped = dropped.unionByName(p.select("doc_id"))
-                # Materialized against the PRE-append index: replay-safe.
-                dropped = dropped.distinct().localCheckpoint(eager=True)
-                # The kept index tables derive from the BATCH tables
-                # already computed (groups_b is persisted): drop the
-                # dropped ids from the member lists and semi-join the
-                # band rows — a rebuild from `kept` would re-tokenize
-                # and re-group the batch a second time per micro-batch
-                # (guide §2.4). Exact equivalence with
-                # build_minhash_index(kept): gids/ti depend only on the
-                # token set (kept ⊆ good shares them verbatim), members
-                # re-collect to the sorted kept subset, and groups left
-                # with no kept member drop out of the inner join — the
-                # identical rows a rebuild would produce.
-                m = (
-                    groups_b.select(
-                        "gid", F.explode("members").alias("doc_id")
-                    )
-                    .join(dropped, "doc_id", "left_anti")
-                    .groupBy("gid")
-                    .agg(
-                        F.sort_array(F.collect_list("doc_id")).alias(
-                            "members"
-                        )
-                    )
-                )
-                g = (
-                    groups_b.select("gid", "ti", "n")
-                    .join(m, "gid")
-                    .select("gid", "members", "ti", "n")
-                )
-                b = bands_b.join(g.select("gid"), "gid", "left_semi")
-                kept = good.join(dropped, "doc_id", "left_anti")
-                # The three writes are independent (distinct dirs; the
-                # index pair reads the persisted groups_b, the curated
-                # write re-runs the scan+gate once): overlapping them
-                # hides the per-action driver latency (planning, py4j,
-                # commit) that dominates these small batches (guide
-                # §2.6).
-                run_concurrent(
-                    lambda: shard(kept)
-                    .write.mode("overwrite")
-                    .parquet(
-                        os.path.join(curated_dir, f"batch_id={batch_id}")
+        dedup_text_batch(
+            spark, good, batch_id, index, threshold,
+            lambda pairs, dropped: (
+                batch_write(
+                    batch.where(F.col(CORRUPT_COL).isNotNull()).select(
+                        CORRUPT_COL
                     ),
-                    lambda: shard(b)
-                    .write.mode("overwrite")
-                    .parquet(
-                        os.path.join(
-                            index_path, "bands", f"batch_id={batch_id}"
-                        )
-                    ),
-                    lambda: shard(g)
-                    .write.mode("overwrite")
-                    .parquet(
-                        os.path.join(
-                            index_path, "groups", f"batch_id={batch_id}"
-                        )
-                    ),
-                )
-            finally:
-                groups_b.unpersist()
-
-        # The quarantine write shares nothing with the curation chain
-        # (disjoint rows, its own directory) — run it alongside.
-        run_concurrent(write_quarantine, curate)
+                    quar_dir, batch_id, n_files,
+                ),
+                batch_write(
+                    good.join(dropped, "doc_id", "left_anti"),
+                    curated_dir, batch_id, n_files,
+                ),
+            ),
+            n_files=n_files,
+        )
         if batch_stats is not None:
             batch_stats.append(
                 {

@@ -26,13 +26,44 @@ import json
 import os
 import sys
 
+from pyspark.sql.streaming import StreamingQueryListener
+
+
+class _StreamRuns(StreamingQueryListener):
+    """The runIds of the streams a query starts. A stream's micro-batch
+    jobs run under the job group ``str(runId)``, not the caller's, so
+    counting only the caller's group misses every ``foreachBatch`` job.
+    ``onQueryStarted`` is called synchronously with ``start()``."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
 
 def measure(spark, queries, sf_dir: str, names: list[str]) -> dict:
     """Run each query (noop sink) under its own job group and return
-    {name: {jobs, stages, tasks}} from the status tracker."""
+    {name: {jobs, stages, tasks}} from the status tracker: the jobs of
+    the query's group, of the streams it started, and any job without
+    a group (e.g. from a thread that did not inherit one) it launched."""
     sc = spark.sparkContext
+    st = sc.statusTracker()
+    runs = _StreamRuns()
+    spark.streams.addListener(runs)
     out: dict[str, dict[str, int]] = {}
     for name in names:
+        runs.run_ids.clear()
+        ungrouped = set(st.getJobIdsForGroup(None))
         sc.setJobGroup(name, name)
         try:
             queries[name](spark, sf_dir).write.format("noop").mode(
@@ -43,8 +74,10 @@ def measure(spark, queries, sf_dir: str, names: list[str]) -> dict:
             continue
         finally:
             sc.setJobGroup("", "")
-        st = sc.statusTracker()
-        jobs = st.getJobIdsForGroup(name)
+        jobs = list(st.getJobIdsForGroup(name))
+        for run_id in runs.run_ids:
+            jobs += st.getJobIdsForGroup(run_id)
+        jobs += set(st.getJobIdsForGroup(None)) - ungrouped
         n_stages = n_tasks = 0
         for j in jobs:
             ji = st.getJobInfo(j)
@@ -60,6 +93,7 @@ def measure(spark, queries, sf_dir: str, names: list[str]) -> dict:
             "stages": n_stages,
             "tasks": n_tasks,
         }
+    spark.streams.removeListener(runs)
     return out
 
 

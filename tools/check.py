@@ -11,6 +11,7 @@ row count, column-name set, and order-insensitive values (floats at
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
@@ -176,7 +177,8 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # The checkout this script lives in, not whichever is installed.
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from mora_spark.session import get_spark
 
