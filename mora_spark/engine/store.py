@@ -52,6 +52,18 @@ level, loading only the matching partitions' pages before any data
 file is even named. The commit point — the CAS on the version file —
 is unchanged; page files are txn-unique and invisible until a commit
 references them.
+
+Timestamps: every ts bound the store keeps or compares — merge and
+rollup spans, the per-file ``lo``/``hi`` stats in the pages, and the
+``start``/``end``/``as_of`` bounds of :meth:`CandleStore.read` — is an
+integer count of epoch microseconds produced by Spark
+(``F.unix_micros``) or by PySpark's own conversion
+(``TimestampType().toInternal``), never by datetime arithmetic here. A
+naive datetime bound therefore means what ``F.lit`` of it means to
+PySpark: driver-local time; an aware one is exact. Year partitions are
+UTC years, because :func:`~mora_spark.session.get_spark` pins
+``spark.sql.session.timeZone=UTC``. The answer does not depend on the
+driver's timezone.
 """
 
 from __future__ import annotations
@@ -92,34 +104,31 @@ class VersionExpiredError(RuntimeError):
     :meth:`CandleStore.expire_versions` (log retention)."""
 
 
-def _ts_micros(x) -> int:
-    """Exact epoch-microsecond value of a (naive-UTC or tz-aware)
-    datetime/date — integer arithmetic, no float round-trip."""
-    if hasattr(x, "to_pydatetime"):  # pandas.Timestamp from pyarrow
-        x = x.to_pydatetime()
-    if isinstance(x, dt.datetime):
-        # Aware datetimes need the aware UTC epoch — subtracting from
-        # an epoch pinned to the INPUT's tz would shift the result by
-        # that offset and mis-prune files. Naive datetimes are UTC by
-        # session contract.
-        epoch = dt.datetime(
-            1970, 1, 1,
-            tzinfo=None if x.tzinfo is None else dt.timezone.utc,
-        )
-    else:  # date
-        x = dt.datetime(x.year, x.month, x.day)
-        epoch = dt.datetime(1970, 1, 1)
-    d = x - epoch
-    return (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
+#: Epoch-micros (lo, hi) a file records when its footer has no ts
+#: statistics: the whole int64 range, so the file overlaps every span
+#: and every read bound (never carried by a merge, never skipped).
+_NO_TS_STATS = (-(2**63), 2**63 - 1)
+
+_TS = T.TimestampType()
 
 
-def _parquet_ts_range(source, col: str = "ts") -> tuple[int, int] | None:
+def _utc(micros: int) -> dt.datetime:
+    """The aware UTC datetime of an epoch-micros value (exact)."""
+    return dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc) + dt.timedelta(
+        microseconds=micros
+    )
+
+
+def _parquet_ts_range(source, col: str = "ts") -> tuple[int, int]:
     """(min, max) epoch micros of ``col`` from the parquet footer's
     row-group statistics — one driver-side footer read per staged
     file (the source of the manifest's file-level skipping stats).
     ``source`` is a local path or a seekable file-like (the storefs
     adapter's ``open_parquet`` — a HadoopInputFile for scheme roots).
-    None when any row group lacks min/max for the column."""
+    pyarrow returns the stats of Spark's INT64 ``isAdjustedToUTC``
+    column as aware UTC datetimes, so ``toInternal`` is exact.
+    :data:`_NO_TS_STATS` when any row group lacks min/max for the
+    column."""
     try:
         import pyarrow.parquet as pq
 
@@ -134,15 +143,16 @@ def _parquet_ts_range(source, col: str = "ts") -> tuple[int, int] | None:
         for r in range(md.num_row_groups):
             st = md.row_group(r).column(ci).statistics
             if st is None or not st.has_min_max:
-                return None
-            mn, mx = _ts_micros(st.min), _ts_micros(st.max)
+                return _NO_TS_STATS
+            mn, mx = _TS.toInternal(st.min), _TS.toInternal(st.max)
             lo = mn if lo is None else min(lo, mn)
             hi = mx if hi is None else max(hi, mx)
         if lo is None:
-            return None
+            return _NO_TS_STATS
         return lo, hi
     except Exception:
-        return None  # stats are an optimization, never a correctness need
+        # stats are an optimization, never a correctness need
+        return _NO_TS_STATS
 
 
 def _local(path: str) -> str:
@@ -166,7 +176,9 @@ class _TxnLog:
     Version N is the file ``_log/{N:012d}.json`` holding one POINTER per
     partition: ``{"partition": {...}, "page": "pages/<txn>-k.json",
     "n": n_files}``. Each page file is an immutable JSON list of that
-    partition's data-file paths (relative to ``data/``). The newest
+    partition's data files, one ``{"p", "lo", "hi"}`` item each: the
+    path relative to ``data/`` and the file's ts min/max in epoch
+    micros (:data:`_NO_TS_STATS` when the footer has none). The newest
     version wins; publishing is atomic-create-if-absent, so exactly one
     of any set of racing writers commits each version. Page files a
     crashed or CAS-losing writer leaves behind are unreferenced and
@@ -190,7 +202,6 @@ class _TxnLog:
         self.dir = os.path.join(root, "_log")
         self.pages_dir = os.path.join(self.dir, "pages")
         self.marker_path = os.path.join(self.dir, "_last_checkpoint")
-        self.retention_path = os.path.join(self.dir, "_retention.json")
 
     def versions(self) -> list[int]:
         """All committed versions, ascending (full listing — used by
@@ -238,20 +249,9 @@ class _TxnLog:
         two vacuums, a vacuum racing an expire — can never regress or
         lose a field the way any read-modify-write of a shared record
         could. The marker dir stays tiny (lower markers are swept on
-        each advance). The legacy combined ``_retention.json`` is
-        still read and max-merged; a CORRUPT legacy record raises
-        rather than silently zeroing the safety floors."""
+        each advance)."""
         out: dict = {}
-        try:
-            out.update(json.loads(self.fs.read_text(self.retention_path)))
-        except FileNotFoundError:
-            pass
-        except ValueError as e:
-            raise ValueError(
-                f"corrupt retention record {self.retention_path}: {e}"
-            ) from e
-        d = self.retention_markers_dir
-        for n in self.fs.listdir(d):
+        for n in self.fs.listdir(self.retention_markers_dir):
             key, _, raw = n.rpartition(".")
             if key and raw.isdigit():
                 out[key] = max(int(raw), out.get(key, 0))
@@ -309,54 +309,29 @@ class _TxnLog:
     @staticmethod
     def _pointers_of(m: dict, version: int) -> list[dict]:
         """Partition pointers of an already-parsed manifest record."""
-        if "pages" in m:
-            return m["pages"]
-        if "files" in m:
-            # Legacy (pre-paging) manifest: a flat inline file list.
-            # Group it into per-partition INLINE pointers (``files``
-            # instead of a ``page`` ref) so every reader — pruning,
-            # entries_at, history — works unchanged on old stores.
-            by_part: dict[tuple, dict] = {}
-            for e in m["files"]:
-                t = tuple(sorted(e["partition"].items()))
-                g = by_part.setdefault(
-                    t, {"partition": e["partition"], "files": []}
-                )
-                g["files"].append(e["path"])
-            return [
-                {**g, "n": len(g["files"])} for g in by_part.values()
-            ]
-        raise ValueError(
-            f"unsupported manifest format at version {version}: "
-            f"expected a 'pages' (paged) or 'files' (legacy) field, "
-            f"found keys {sorted(m)}"
-        )
+        if "pages" not in m:
+            raise ValueError(
+                f"unsupported manifest format at version {version}: "
+                f"expected a 'pages' field, found keys {sorted(m)}"
+            )
+        return m["pages"]
 
     def load_page(self, pointer: dict) -> list[dict]:
-        """Expand one partition pointer to its file entries. Page items
-        are either plain path strings (legacy) or ``{"p", "lo", "hi"}``
-        records carrying the file's ts min/max in epoch micros — the
-        Delta-style file-level statistics the read path prunes on."""
-        if "files" in pointer:  # inline pointer from a legacy manifest
-            items = pointer["files"]
-        else:
-            items = json.loads(
-                self.fs.read_text(os.path.join(self.dir, pointer["page"]))
-            )
-        out = []
-        for it in items:
-            if isinstance(it, str):
-                out.append({"path": it, "partition": pointer["partition"]})
-            else:
-                out.append(
-                    {
-                        "path": it["p"],
-                        "ts_lo": it["lo"],
-                        "ts_hi": it["hi"],
-                        "partition": pointer["partition"],
-                    }
-                )
-        return out
+        """Expand one partition pointer to its file entries, each with
+        the file's ts min/max in epoch micros — the Delta-style
+        file-level statistics the merge and read paths prune on."""
+        items = json.loads(
+            self.fs.read_text(os.path.join(self.dir, pointer["page"]))
+        )
+        return [
+            {
+                "path": it["p"],
+                "ts_lo": it["lo"],
+                "ts_hi": it["hi"],
+                "partition": pointer["partition"],
+            }
+            for it in items
+        ]
 
     def entries_at(self, version: int, keep=None) -> list[dict]:
         """Flattened file entries at ``version``; with ``keep`` (a
@@ -418,16 +393,12 @@ class _TxnLog:
     ) -> dict:
         """Write one immutable page file; returns its pointer. Unique
         (txn, k) naming means no CAS is needed here — a page is dead
-        weight until a committed version references it. Entries with
-        ts statistics serialize as {"p","lo","hi"}; those without stay
-        plain path strings (both readable by load_page)."""
+        weight until a committed version references it."""
         self.fs.makedirs(self.pages_dir)
         rel = os.path.join("pages", f"{txn}-{k:06d}.json")
         tmp = os.path.join(self.dir, rel + ".tmp")
         items = [
             {"p": e["path"], "lo": e["ts_lo"], "hi": e["ts_hi"]}
-            if "ts_lo" in e and "ts_hi" in e
-            else e["path"]
             for e in sorted(files, key=lambda e: e["path"])
         ]
         self.fs.write_file(tmp, json.dumps(items))
@@ -689,11 +660,11 @@ class CandleStore:
             dest = os.path.join(self.data_dir, dest_rel)
             self._fs.makedirs(os.path.dirname(dest))
             self._fs.rename(os.path.join(staging, rel), dest)
-            entry = {"path": dest_rel, "partition": partition}
-            rng = _parquet_ts_range(self._fs.open_parquet(dest))
-            if rng is not None:
-                entry["ts_lo"], entry["ts_hi"] = rng
-            entries.append(entry)
+            lo, hi = _parquet_ts_range(self._fs.open_parquet(dest))
+            entries.append(
+                {"path": dest_rel, "partition": partition,
+                 "ts_lo": lo, "ts_hi": hi}
+            )
         self._fs.rmtree(staging)
         return entries
 
@@ -701,7 +672,6 @@ class CandleStore:
         self,
         df: DataFrame,
         mode: str = "merge",
-        touched_partitions: set[tuple[str, ...]] | None = None,
         touched_spans: dict[tuple[str, ...], tuple[int, int]] | None = None,
     ) -> None:
         """Upsert (``merge``) or blind-append (``append``) a batch.
@@ -714,6 +684,11 @@ class CandleStore:
         read nor rewritten. Concurrent writers serialize through the
         manifest CAS: the loser recomputes against the winner's
         snapshot, so no committed row is ever lost.
+
+        ``touched_spans`` maps each partition tuple the batch touches
+        to the batch's (min, max) ts in epoch micros there; its keys
+        ARE the touched set. A caller that already knows it passes it
+        and skips the batch aggregation that would compute it.
         """
         batch = self._normalize(df)
         if mode == "append":
@@ -759,54 +734,48 @@ class CandleStore:
         # Partition tuple count is bounded (series x years), so the
         # collect and the driver-side manifest pruning stay small even
         # for huge row counts. A caller that already KNOWS the touched
-        # set (derive_rollup: the bucket grid it collected to build the
-        # semi-join) passes it in and skips this evaluation — for a
-        # derived batch the distinct here would replay the whole
-        # read-back + resample chain just to rediscover the same keys.
-        # ONE aggregation returns the partition set AND its per-
-        # partition ts span (partial aggregation makes the min/max free
-        # relative to the old distinct), so the read-back below can
-        # skip files whose stats range cannot collide with the batch.
-        if touched_partitions is None:
-            rows = (
-                batch.groupBy(*CANDLE_PARTITIONS)
-                .agg(F.min("ts").alias("__lo"), F.max("ts").alias("__hi"))
-                .collect()
-            )
-            touched = {
-                tuple(str(r[c]) for c in CANDLE_PARTITIONS) for r in rows
-            }
+        # spans (derive_rollup: the bucket grid it collected to build
+        # the semi-join) passes them in and skips this evaluation — for
+        # a derived batch it would replay the whole read-back +
+        # resample chain just to rediscover the same keys. ONE
+        # aggregation returns the partition set AND its per-partition
+        # ts span, so the read-back below can skip files whose stats
+        # range cannot collide with the batch.
+        if touched_spans is None:
             touched_spans = {
                 tuple(str(r[c]) for c in CANDLE_PARTITIONS): (
-                    _ts_micros(r["__lo"]),
-                    _ts_micros(r["__hi"]),
+                    r["__lo"], r["__hi"]
                 )
-                for r in rows
+                for r in batch.groupBy(*CANDLE_PARTITIONS)
+                .agg(
+                    F.min(F.unix_micros("ts")).alias("__lo"),
+                    F.max(F.unix_micros("ts")).alias("__hi"),
+                )
+                .collect()
             }
-        else:
-            touched = touched_partitions
-        spans = touched_spans or {}
 
         def _collides(e: dict, t: tuple[str, ...]) -> bool:
             # A carried (neither re-read nor rewritten) file must be
             # PROVABLY collision-free with the batch: rows collide only
             # on an equal candle key, the file shares the partition's
             # (market, candle_length, code), and every batch row of
-            # partition t has ts inside spans[t] — so a file whose
+            # partition t has ts inside its span — so a file whose
             # manifest ts range is disjoint from the span shares no key
             # with the batch and the LWW merge would pass its rows
-            # through verbatim. Entries without stats (legacy pages)
-            # and partitions without a span always merge.
-            span = spans.get(t)
-            if span is None or "ts_lo" not in e or "ts_hi" not in e:
-                return True
-            return not (e["ts_hi"] < span[0] or e["ts_lo"] > span[1])
+            # through verbatim. A file without footer stats records
+            # the whole int64 range and always merges.
+            lo, hi = touched_spans[t]
+            return not (e["ts_hi"] < lo or e["ts_lo"] > hi)
 
         for _ in range(MAX_COMMIT_RETRIES):
             txn = uuid.uuid4().hex
             version, pointers = self._log.current()
-            replaced = [p for p in pointers if self._tuple_of(p) in touched]
-            kept = [p for p in pointers if self._tuple_of(p) not in touched]
+            replaced = [
+                p for p in pointers if self._tuple_of(p) in touched_spans
+            ]
+            kept = [
+                p for p in pointers if self._tuple_of(p) not in touched_spans
+            ]
             # File-level pruning of the merge read-back (the
             # continuous-ingest hot path): only files whose ts range
             # can overlap the batch's span for their partition are read
@@ -816,18 +785,11 @@ class CandleStore:
             # (previously every micro-batch re-read and rewrote every
             # earlier batch's rows of each touched partition).
             overlap_entries: list[dict] = []
-            carried: dict[tuple, dict] = {}
+            carried: list[dict] = []
             for ptr in replaced:
                 t = self._tuple_of(ptr)
                 for e in self._log.load_page(ptr):
-                    if _collides(e, t):
-                        overlap_entries.append(e)
-                    else:
-                        g = carried.setdefault(
-                            t,
-                            {"partition": ptr["partition"], "files": []},
-                        )
-                        g["files"].append(e)
+                    (overlap_entries if _collides(e, t) else carried).append(e)
             if overlap_entries:
                 existing = self._read_files(overlap_entries).select(
                     *batch.columns
@@ -845,16 +807,7 @@ class CandleStore:
             else:
                 merged = batch
             new = self._stage_and_publish(merged, txn)
-            by_part = self._group_by_partition(new)
-            for t, g in carried.items():
-                if t in by_part:
-                    by_part[t]["files"].extend(g["files"])
-                else:
-                    by_part[t] = g
-            pages = [
-                self._log.write_page(g["partition"], g["files"], txn, k)
-                for k, g in enumerate(by_part.values())
-            ]
+            pages = self._page_out(new + carried, txn)
             if self._log.try_commit(version + 1, kept + pages, txn):
                 return
             # Lost the race: the published-but-uncommitted files and
@@ -992,9 +945,7 @@ class CandleStore:
                 continue
             try:
                 keep_pages.update(
-                    p["page"]
-                    for p in self._log.pointers_at(v)
-                    if "page" in p
+                    p["page"] for p in self._log.pointers_at(v)
                 )
             except (FileNotFoundError, VersionExpiredError):
                 pass  # a concurrent expirer with a higher floor got it
@@ -1110,8 +1061,10 @@ class CandleStore:
         b = self._normalize(batch)
         # The touched-bucket grid MUST be the identical expression
         # resample writes on (shared bucket_expr) — a divergent grid
-        # would make the semi-join silently drop buckets.
-        bucket = bucket_expr(target_length_s, anchor_s)
+        # would make the semi-join silently drop buckets. Buckets travel
+        # as epoch micros, so the driver round trip of the touched set
+        # is exact in any driver timezone.
+        bucket = F.unix_micros(bucket_expr(target_length_s, anchor_s))
         # ONE pass over the batch collects the span, the granularity
         # bounds AND the touched-bucket set (bounded by the batch's
         # distinct (series, bucket) keys — the same cardinality the
@@ -1119,8 +1072,8 @@ class CandleStore:
         # bucket set as a separate distinct would re-evaluate the batch
         # in its own broadcast-build job.
         span = b.agg(
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
+            F.min(F.unix_micros("ts")).alias("lo"),
+            F.max(F.unix_micros("ts")).alias("hi"),
             F.min("candle_length").alias("len_lo"),
             F.max("candle_length").alias("len_hi"),
             F.collect_set(
@@ -1135,7 +1088,7 @@ class CandleStore:
                 (r["market"], r["code"], r["__bucket"])
                 for r in span["buckets"]
             ],
-            "market string, code string, __bucket timestamp",
+            "market string, code string, __bucket long",
         )
         if (
             span["len_lo"] != source_length_s
@@ -1149,10 +1102,11 @@ class CandleStore:
                 f" {span['len_lo']}..{span['len_hi']} != source series"
                 f" length {source_length_s}"
             )
-        lo = span["lo"] - dt.timedelta(seconds=target_length_s)
-        hi = span["hi"] + dt.timedelta(seconds=target_length_s)
+        pad = target_length_s * 1_000_000
         src = self.read(
-            candle_length=source_length_s, start=lo, end=hi
+            candle_length=source_length_s,
+            start=_utc(span["lo"] - pad),
+            end=_utc(span["hi"] + pad),
         ).withColumn("__bucket", bucket)
         affected = src.join(
             F.broadcast(touched), ["market", "code", "__bucket"]
@@ -1174,7 +1128,9 @@ class CandleStore:
         # ITS read-back of the derived series.
         grid = (
             touched.groupBy(
-                "market", "code", F.year("__bucket").alias("y")
+                "market",
+                "code",
+                F.year(F.timestamp_micros("__bucket")).alias("y"),
             )
             .agg(
                 F.min("__bucket").alias("__lo"),
@@ -1182,21 +1138,13 @@ class CandleStore:
             )
             .collect()
         )
-        parts = {
-            (r["market"], str(target_length_s), r["code"], str(r["y"]))
-            for r in grid
-        }
-        spans = {
-            (r["market"], str(target_length_s), r["code"], str(r["y"])): (
-                _ts_micros(r["__lo"]),
-                _ts_micros(r["__hi"]),
-            )
-            for r in grid
-        }
         self.write(
             resample(affected, target_length_s, anchor_s=anchor_s),
-            touched_partitions=parts,
-            touched_spans=spans,
+            touched_spans={
+                (r["market"], str(target_length_s), r["code"], str(r["y"])):
+                (r["__lo"], r["__hi"])
+                for r in grid
+            },
         )
 
     # -- read path ---------------------------------------------------
@@ -1341,8 +1289,10 @@ class CandleStore:
         even listed to Spark), then the same predicates run as partition
         and row-group filters on the pruned scan.
 
-        ``start``/``end`` bound ``ts`` as [start, end) and additionally
-        prune whole year partitions before any file is opened.
+        ``start``/``end`` are datetimes bounding ``ts`` as [start,
+        end); they additionally prune whole (UTC) year partitions and
+        files by their ts stats before any file is opened. A naive
+        bound is driver-local time, as in PySpark's ``F.lit``.
 
         ``version`` time-travels: the scan is planned against that
         manifest snapshot instead of the newest one (the reference's
@@ -1352,6 +1302,12 @@ class CandleStore:
         :meth:`vacuum` reclaims files the NEWEST manifest no longer
         references — vacuum bounds the time-travel horizon, as in Delta.
         """
+        # The same conversion PySpark applies to the F.lit(start/end)
+        # filters below, so the driver-side pruning and the Spark
+        # filter agree on every bound in any driver timezone.
+        lo_req = _TS.toInternal(start) if start is not None else None
+        hi_req = _TS.toInternal(end) if end is not None else None
+
         def keep(e: dict) -> bool:
             p = e["partition"]
             if market is not None and p["market"] != market:
@@ -1362,25 +1318,17 @@ class CandleStore:
                 candle_length
             ):
                 return False
-            if (
-                start is not None
-                and hasattr(start, "year")
-                and int(p["year"]) < start.year
-            ):
+            if lo_req is not None and int(p["year"]) < _utc(lo_req).year:
                 return False
-            if (
-                end is not None
-                and hasattr(end, "year")
-                and int(p["year"]) > end.year
-            ):
+            if hi_req is not None and int(p["year"]) > _utc(hi_req).year:
                 return False
             return True
 
         # keep() runs on POINTERS: non-matching partitions' pages are
         # never opened, so planning cost scales with the partitions the
         # key touches, not the store's total file count. An explicit
-        # ``version`` that was never committed raises (the pre-paging
-        # contract); only the implicit empty-store read returns empty.
+        # ``version`` that was never committed raises; only the
+        # implicit empty-store read returns empty.
         if as_of is not None:
             # Timestamp time travel (Delta's TIMESTAMP AS OF): resolve
             # the newest version committed at or before the instant,
@@ -1390,7 +1338,7 @@ class CandleStore:
             as_of_s = (
                 float(as_of)
                 if isinstance(as_of, (int, float))
-                else _ts_micros(as_of) / 1e6
+                else _TS.toInternal(as_of) / 1e6
             )
             version = self._log.version_at(as_of_s)
             if not version:
@@ -1400,17 +1348,14 @@ class CandleStore:
                     f"was expired)"
                 )
 
-        lo_req = _ts_micros(start) if start is not None else None
-        hi_req = _ts_micros(end) if end is not None else None
-
         def keep_file(e: dict) -> bool:
             # Delta-style file skipping on the manifest's ts stats:
             # a file whose [lo, hi] range cannot overlap [start, end)
-            # is never even named to Spark. Entries without stats
-            # (legacy pages) always pass.
-            if lo_req is not None and "ts_hi" in e and e["ts_hi"] < lo_req:
+            # is never even named to Spark (a file without footer
+            # stats records the whole int64 range and always passes).
+            if lo_req is not None and e["ts_hi"] < lo_req:
                 return False
-            if hi_req is not None and "ts_lo" in e and e["ts_lo"] >= hi_req:
+            if hi_req is not None and e["ts_lo"] >= hi_req:
                 return False
             return True
 

@@ -5,7 +5,7 @@
 (``.coalesce(1)`` before a single-file write, or a broadcast build
 that fuses the scan) computes every slice SEQUENTIALLY, and each
 slice pays its own Python-runner round-trip — measured ~7 s for a
-16-row centroid write on local[32] (tools/r17/micro_createdf.py),
+16-row centroid write on local[32] (OPTIMIZATION_r17.md, fix 1),
 and the same pathology follows the core count on a real cluster.
 Driver-side model/lookup tables are by definition tiny, so they
 belong in ONE slice: one round-trip, one task, whatever downstream

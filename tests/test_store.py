@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from mora_spark.engine import CandleStore
 from mora_spark.schema import CANDLE_SCHEMA
 
+UTC = dt.timezone.utc
+
 
 def mk(spark, rows):
     data = [
@@ -62,8 +64,8 @@ def test_merge_is_idempotent(spark, store):
 
 def test_cross_year_batch_splits_partitions(spark, store, tmp_path):
     b = mk(spark, [
-        ("BTC", dt.datetime(2020, 12, 31, 23, 59), 1.0),
-        ("BTC", dt.datetime(2021, 1, 1, 0, 0), 2.0),
+        ("BTC", dt.datetime(2020, 12, 31, 23, 59, tzinfo=UTC), 1.0),
+        ("BTC", dt.datetime(2021, 1, 1, 0, 0, tzinfo=UTC), 2.0),
     ])
     store.write(b)
     import os
@@ -76,7 +78,8 @@ def test_cross_year_batch_splits_partitions(spark, store, tmp_path):
                 years.add(d)
     assert years == {"year=2020", "year=2021"}
     # Time-range read across the boundary
-    out = store.read(start=dt.datetime(2020, 12, 31), end=dt.datetime(2021, 1, 2))
+    out = store.read(start=dt.datetime(2020, 12, 31, tzinfo=UTC),
+                     end=dt.datetime(2021, 1, 2, tzinfo=UTC))
     assert out.count() == 2
 
 
@@ -158,10 +161,10 @@ def test_f1a_reference_demo_workload(spark, tmp_path):
     Exercises multi-year splitting and the full write->read contract."""
     s = CandleStore(spark, str(tmp_path / "demo"))
     series = [
-        (dt.datetime(2021, 1, 1), "ETH"),
-        (dt.datetime(2021, 7, 1), "BTC"),
-        (dt.datetime(2022, 1, 1), "BTC2"),
-        (dt.datetime(2022, 7, 1), "BTC3"),
+        (dt.datetime(2021, 1, 1, tzinfo=UTC), "ETH"),
+        (dt.datetime(2021, 7, 1, tzinfo=UTC), "BTC"),
+        (dt.datetime(2022, 1, 1, tzinfo=UTC), "BTC2"),
+        (dt.datetime(2022, 7, 1, tzinfo=UTC), "BTC3"),
     ]
     for start, code in series:
         rows = [
@@ -430,36 +433,6 @@ def test_read_prunes_partitions(spark, store):
     assert pf, f"no year partition filter in scan:\n{plan[:2000]}"
 
 
-def test_legacy_flat_manifest_still_readable(spark, store, tmp_path):
-    """The pre-paging manifest format ({"files": [...]}) must stay
-    readable: pointers_at synthesizes inline pointers from the flat
-    list, and a new commit on top re-pages normally."""
-    import json
-    import os
-
-    store.write(mk(spark, [("BTC", dt.datetime(2021, 1, 1, 0, 0), 1.0),
-                           ("ETH", dt.datetime(2021, 1, 1, 0, 0), 2.0)]))
-    # Rewrite version 1 into the legacy flat format.
-    log = store._log
-    v1 = os.path.join(log.dir, f"{1:012d}.json")
-    entries = log.entries_at(1)
-    with open(v1, "w") as f:
-        json.dump({"version": 1, "files": entries}, f)
-    fresh = CandleStore(spark, str(tmp_path / "candles"))
-    assert fresh.read().count() == 2
-    assert fresh.read(code="ETH").count() == 1
-    hist = {r["version"]: r["n_files"] for r in fresh.history().collect()}
-    assert hist[1] == 2
-    # A merge on top of a legacy manifest commits v2: the touched
-    # partition is re-paged; the untouched one may carry its inline
-    # legacy pointer forward by reference (valid in both formats).
-    fresh.write(mk(spark, [("BTC", dt.datetime(2021, 1, 1, 0, 1), 3.0)]))
-    assert fresh.read().count() == 3
-    v2 = {p["partition"]["code"]: p for p in fresh._log.pointers_at(2)}
-    assert "page" in v2["BTC"]
-    assert fresh.read(code="ETH").count() == 1
-
-
 def test_unsupported_manifest_format_raises(spark, store):
     import json
     import os
@@ -692,7 +665,11 @@ def test_manifest_file_stats_prune_within_partition(spark, store):
         store.write(mk(spark, rows), mode="append")
     _, pointers = store._log.current()
     entries = store._entries_for(pointers)
-    assert all("ts_lo" in e and "ts_hi" in e for e in entries), entries
+    from mora_spark.engine.store import _NO_TS_STATS
+
+    assert all(
+        (e["ts_lo"], e["ts_hi"]) != _NO_TS_STATS for e in entries
+    ), entries
     # every file whose range is outside hour 6 must never be named
     named = []
     orig = type(store)._read_files
@@ -709,28 +686,29 @@ def test_manifest_file_stats_prune_within_partition(spark, store):
         assert out.count() == 3  # exactly the hour-6 append's rows
     finally:
         type(store)._read_files = orig
-    from mora_spark.engine.store import _ts_micros
+    from pyspark.sql.types import TimestampType
 
+    lo_us = TimestampType().toInternal(lo)
+    hi_us = TimestampType().toInternal(hi)
     assert 0 < len(named) < len(entries)
     for e in named:
-        assert e["ts_hi"] >= _ts_micros(lo) and e["ts_lo"] < _ts_micros(hi)
+        assert e["ts_hi"] >= lo_us and e["ts_lo"] < hi_us
 
 
-def test_ts_micros_handles_timezones():
-    import datetime as dtm
-
-    from mora_spark.engine.store import _ts_micros
-
-    naive = dtm.datetime(2021, 1, 1, 9, 0)
-    aware_utc = dtm.datetime(2021, 1, 1, 9, 0, tzinfo=dtm.timezone.utc)
-    aware_plus5 = dtm.datetime(
-        2021, 1, 1, 14, 0,
-        tzinfo=dtm.timezone(dtm.timedelta(hours=5)),
-    )  # same instant as 09:00 UTC
-    assert _ts_micros(naive) == _ts_micros(aware_utc) == _ts_micros(
-        aware_plus5
+def test_read_with_aware_bounds_prunes_by_utc_year(spark, store):
+    """A tz-aware bound names an instant: 2021-01-01 02:00+05:00 is
+    2020-12-31 21:00Z, so the row stored at 22:00Z in the 2020
+    partition is inside [start, end) — the year prune must use the
+    bound's UTC year, not its own calendar year."""
+    store.write(mk(spark, [
+        ("BTC", dt.datetime(2020, 12, 31, 22, 0, tzinfo=UTC), 1.0),
+    ]))
+    plus5 = dt.timezone(dt.timedelta(hours=5))
+    out = store.read(
+        start=dt.datetime(2021, 1, 1, 2, 0, tzinfo=plus5),
+        end=dt.datetime(2021, 1, 1, 0, 0, tzinfo=UTC),
     )
-    assert _ts_micros(dtm.date(1970, 1, 2)) == 86_400_000_000
+    assert [r["open"] for r in out.collect()] == [1.0]
 
 
 def test_timestamp_time_travel(spark, store):
@@ -838,7 +816,7 @@ def test_derive_rollup_precomputed_partitions_cross_year(spark, store):
     (duplicate rows on read)."""
     from mora_spark.operators.resample import resample
 
-    base = dt.datetime(2024, 12, 31, 23, 57)
+    base = dt.datetime(2024, 12, 31, 23, 57, tzinfo=UTC)
     b = mk(spark, [
         ("BTC", base + dt.timedelta(minutes=i), 100.0 + i)
         for i in range(6)  # 23:57..00:02 -> buckets 23:55, 00:00
@@ -929,13 +907,13 @@ def test_write_page_overwrites_on_append_retry(tmp_path):
             _os.replace(src, dst)
 
     log = _TxnLog(str(tmp_path / "s"), fs=HdfsRenameSemantics())
-    files = [{"path": "data/a.parquet"}]
-    p1 = log.write_page({"market": "SYN"}, files, "txnA", 0)
+    a = {"path": "data/a.parquet", "ts_lo": 0, "ts_hi": 10}
+    b = {"path": "data/b.parquet", "ts_lo": 20, "ts_hi": 30}
+    p1 = log.write_page({"market": "SYN"}, [a], "txnA", 0)
     # retry after a lost race: same txn, same k, updated file set
-    files2 = [{"path": "data/a.parquet"}, {"path": "data/b.parquet"}]
-    p2 = log.write_page({"market": "SYN"}, files2, "txnA", 0)
+    p2 = log.write_page({"market": "SYN"}, [a, b], "txnA", 0)
     assert p2["page"] == p1["page"]
     assert log.load_page(p2) == [
-        {"path": "data/a.parquet", "partition": {"market": "SYN"}},
-        {"path": "data/b.parquet", "partition": {"market": "SYN"}},
+        {**a, "partition": {"market": "SYN"}},
+        {**b, "partition": {"market": "SYN"}},
     ]

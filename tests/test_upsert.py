@@ -72,11 +72,14 @@ def test_idempotent_rewrite(spark):
 def test_multi_year_batch_splits(spark):
     # Year-boundary edges (F1d): rows land in distinct year partitions.
     data = [
-        ("UPBIT", "BTC", 60, dt.datetime(2020, 12, 31, 23, 59, 59),
+        ("UPBIT", "BTC", 60,
+         dt.datetime(2020, 12, 31, 23, 59, 59, tzinfo=dt.timezone.utc),
          1.0, 1.0, 1.0, 1.0, 1.0, 0),
-        ("UPBIT", "BTC", 60, dt.datetime(2021, 1, 1, 0, 0, 0),
+        ("UPBIT", "BTC", 60,
+         dt.datetime(2021, 1, 1, 0, 0, 0, tzinfo=dt.timezone.utc),
          2.0, 2.0, 2.0, 2.0, 2.0, 0),
-        ("UPBIT", "BTC", 60, dt.datetime(2020, 2, 29, 12, 0, 0),
+        ("UPBIT", "BTC", 60,
+         dt.datetime(2020, 2, 29, 12, 0, 0, tzinfo=dt.timezone.utc),
          3.0, 3.0, 3.0, 3.0, 3.0, 0),
     ]
     df = spark.createDataFrame(data, CANDLE_SCHEMA).withColumn(
