@@ -1,6 +1,9 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints TWO
+JSON lines: the full record (also written to ``bench_full.json``), then
+a compact last line {"metric", "value", "unit", "n_queries", "n_errors",
+"queries", "sf"} whose ``value`` is this run's total over the lines
+that ran without error.
 
 Each query is materialized with the noop sink (full execution, no
 driver-side collect) so timings measure the distributed plan, not
@@ -168,137 +171,6 @@ PRESTAGED = [
 ]
 
 
-#: Env-probe health threshold for headline selection: the all-cores
-#: numpy probe lands ~1.3s on this host's healthy phases and 2.2-6.0s
-#: in the documented degraded (CPU-capped) phases — 1.8 splits the two
-#: observed clusters with margin on both sides (r4-r14 records in
-#: tools/bench_sessions.jsonl).
-#:
-#: Recalibration was EVALUATED AND DECLINED in r16 (the r15 verdict's
-#: missing #3 asked for a healthy-phase record or a justified new
-#: threshold): across the 18 recorded full runs of r14-r16 the probe
-#: spans 1.79-19.8 with ZERO both-sides-<=1.8 pairs — the ~1.3 cluster
-#: has not reappeared — and within the sustained 1.9-3.6 band the
-#: probe value does not correlate with the run totals (263.4-326.8
-#: interleave freely), while >=5 clearly inflates (374.8 at 5.1/6.0;
-#: the 19.8-after-probe run's tail collapsed). Raising the threshold
-#: to ~2.5-4.0 would flip ``degraded`` to false on runs that ARE
-#: host-inflated relative to the r13 healthy record (230.5s) without
-#: changing the selected value (min-among-comparable already picks
-#: the same number) — it would relabel degradation as health, not
-#: measure better. The flag therefore stays honest: it means
-#: "no run reached the best-known host phases", which is true.
-HEALTHY_MULTI_S = 1.8
-
-
-def select_headline(
-    session_runs: list[dict],
-    n_queries: int,
-    this_run: dict,
-    allowed_heads: frozenset[str] | None = None,
-) -> tuple[dict, bool]:
-    """Pick the run whose total becomes the artifact's headline
-    ``value`` (VERDICT r14 missing #3 — "last run wins" committed the
-    session's WORST run in r14).
-
-    Policy: the MINIMUM total among comparable runs (same sf — the
-    caller pre-filters, same query count, zero errors, code-current
-    head) whose env probes cleared :data:`HEALTHY_MULTI_S` on both
-    sides. Min-among-healthy is the right statistic on this host
-    because every documented distortion INFLATES wall time (CPU
-    frequency/credit capping, rounds 4-14), never deflates it: the
-    fastest healthy run is the most faithful measure of the code.
-    When no run clears the probe (all five r14 runs), falls back to
-    the min among comparable runs with ``degraded=True`` so a reader
-    knows the number still carries host inflation. The same-query-
-    count gate blocks shape changes; ``allowed_heads`` blocks SAME-
-    shape code changes (r15 ADVICE #1: a perf-relevant commit that
-    keeps the query list unchanged must not inherit an older commit's
-    faster total for 24h): ``allowed_heads`` is the set of FULL shas
-    at-or-after the newest commit touching perf-relevant paths
-    (``mora_spark/``, ``bench.py``, ``__spark_entry__.py``), and a
-    recorded run pools only if its (short) ``head`` prefixes one of
-    them. An EMPTY set means the working tree has uncommitted
-    perf-relevant edits — no recorded run describes the current code,
-    so only this run pools. ``None`` (git unavailable) falls back to
-    exact-head equality with this run. ``this_run`` itself always
-    passes the head gate: it IS the current code by construction.
-
-    Returns ``(best_run, degraded)``."""
-
-    def _head_ok(r: dict) -> bool:
-        if r is this_run:
-            return True
-        h = r.get("head")
-        if allowed_heads is None:
-            # Truthy on BOTH sides: when this run's head is also None
-            # (git unavailable), unstamped legacy runs must not pool
-            # as "equal" (r16 ADVICE #4).
-            return bool(h) and h == this_run.get("head")
-        return bool(h) and any(
-            full.startswith(h) for full in allowed_heads
-        )
-
-    def _probe_healthy(r: dict) -> bool:
-        p = r.get("env_probe") or {}
-        return all(
-            (p.get(side) or {}).get("multi_s", 99.0) <= HEALTHY_MULTI_S
-            for side in ("before", "after")
-        )
-
-    comparable = [
-        r
-        for r in session_runs
-        if r.get("n_queries") == n_queries
-        and r.get("n_errors", 1) == 0
-        and r.get("total", -1.0) >= 0
-        and _head_ok(r)
-    ]
-    healthy = [r for r in comparable if _probe_healthy(r)]
-    pool = healthy or comparable or [this_run]
-    return min(pool, key=lambda r: r["total"]), not healthy
-
-
-def current_code_heads(root: str | None = None) -> frozenset[str] | None:
-    """Full shas of every commit at-or-after the newest commit that
-    touched a perf-relevant path — the commits whose recorded bench
-    runs still describe the CURRENT code. Empty set when the working
-    tree has uncommitted perf-relevant edits (then no recorded run
-    qualifies); ``None`` when git can't answer."""
-    import subprocess
-
-    if root is None:
-        root = os.path.dirname(os.path.abspath(__file__))
-    perf_paths = ["mora_spark", "bench.py", "__spark_entry__.py"]
-
-    def _git(*args: str) -> str:
-        out = subprocess.run(
-            ["git", *args],
-            capture_output=True,
-            text=True,
-            cwd=root,
-            timeout=10,
-        )
-        if out.returncode != 0:
-            raise RuntimeError(out.stderr.strip())
-        return out.stdout
-
-    try:
-        if _git("status", "--porcelain", "--", *perf_paths).strip():
-            return frozenset()
-        perf = _git(
-            "log", "-1", "--format=%H", "--", *perf_paths
-        ).strip()
-        if not perf:
-            return None
-        revs = _git("rev-list", "--max-count=500", "HEAD").split()
-        if perf not in revs:
-            return None
-        return frozenset(revs[: revs.index(perf) + 1])
-    except Exception:
-        return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -342,13 +214,10 @@ def main() -> None:
         F.pandas_udf(_np_warm, "double")(F.col("value")).alias("v")
     ).write.format("noop").mode("overwrite").save()
 
-    # Code-independent host-health fingerprint, recorded in the JSON:
+    # Code-independent host-health fingerprint, recorded as metadata:
     # wall time of a fixed numpy workload, single-thread and
-    # all-cores, sampled before and after the query loop. The round-4
-    # host showed 5-9x throughput swings on identical code (CPU
-    # frequency/credit capping, zero steal time); this probe lets a
-    # reader attribute per-query outliers to the environment without
-    # rerunning anything.
+    # all-cores, sampled before and after the query loop, so a reader
+    # can attribute per-query outliers to the host without rerunning.
     def _env_probe() -> dict[str, float]:
         import numpy as np
         from concurrent.futures import ThreadPoolExecutor
@@ -453,176 +322,29 @@ def main() -> None:
         if ok:  # lower median: resists host-inflation outliers
             timings[name] = ok[(len(ok) - 1) // 2]
 
-    # Contention canaries: re-run a handful of pure, stateless batch
-    # queries twice more and report all three wall times. If the bench
-    # environment was contended (another JVM, CPU pressure), the spread
-    # makes it self-evident in the recorded JSON — no rerun needed to
-    # adjudicate (the round-2 "inflation" episode took an isolated
-    # re-run to root-cause). Stateful queries (streaming, store writes)
-    # and session-memoized ones (the LSH cascade) are excluded: their
-    # repeats measure caches, not the plan. The headline "queries"/
-    # "value" stay single-pass, comparable with earlier rounds.
-    canaries = [
-        "q_tpch_q9",
-        "q_topk_volume",
-        "q_asof_trades",
-        "q_dedup_exact",
-    ]
-    canary_runs: dict[str, list[float]] = {}
-    for name in canaries:
-        fn = queries.get(name)
-        if fn is None or timings.get(name, -1.0) < 0:
-            continue
-        runs = [timings[name]]
-        for _ in range(2):
-            t0 = time.time()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as exc:  # pragma: no cover
-                print(f"canary error {name}: {exc}", file=sys.stderr)
-                runs.append(-1.0)
-                break
-            runs.append(round(time.time() - t0, 3))
-        canary_runs[name] = runs
-
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-
-    # Self-adjudicating record (VERDICT r13 missing #3): every full
-    # run appends its headline + env probes to a sidecar log, and the
-    # committed bench_full.json embeds the recent runs as
-    # session_runs — so when a degraded-phase record lands (the r13
-    # episode: two degraded runs at 280/286s vs a healthy 230.5s),
-    # the artifact itself carries the evidence a judge needs, instead
-    # of commit messages. Same-sf entries from the last 24h, newest
-    # last, capped at 12.
-    env_after = _env_probe()
-    sessions_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "tools",
-        "bench_sessions.jsonl",
-    )
-    # The code version that produced each run, so a selected headline
-    # is attributable without timestamp archaeology (the same-query-
-    # count comparability gate already blocks shape changes; this
-    # records WHICH commit's run won when the shape did not change).
-    try:
-        import subprocess
-
-        head = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True,
-            text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=10,
-        ).stdout.strip() or None
-    except Exception:
-        head = None
-    this_run = {
-        "ts": round(time.time(), 1),
-        "total": total,
-        "n_queries": len(timings),
-        "n_errors": sum(1 for t in timings.values() if t < 0),
-        "env_probe": {"before": env_before, "after": env_after},
-        "sf": sf,
-        "head": head,
-    }
-    session_runs = []
-    try:
-        with open(sessions_path) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    session_runs.append(json.loads(line))
-                except json.JSONDecodeError:
-                    # a truncated line (interrupted rewrite) must not
-                    # crash a completed 200s+ bench run
-                    continue
-    except OSError:
-        pass
-    session_runs.append(this_run)
-    session_runs = [
-        r
-        for r in session_runs
-        if this_run["ts"] - r.get("ts", 0) < 24 * 3600
-    ][-24:]
-    tmp_path = sessions_path + ".tmp"
-    with open(tmp_path, "w") as f:
-        for r in session_runs:
-            f.write(json.dumps(r) + "\n")
-    os.replace(tmp_path, sessions_path)
-    # only same-sf runs are comparable to this record's headline
-    session_runs = [r for r in session_runs if r.get("sf") == sf][-12:]
-
-    # The per-query `queries` map always describes THIS run
-    # (this_run_total); all candidate totals + probes stay in
-    # session_runs for adjudication. Policy: select_headline above.
-    allowed_heads = current_code_heads()
-    best, degraded = select_headline(
-        session_runs, len(timings), this_run, allowed_heads
-    )
-
     full = {
         "metric": "headline_queries_total_wall",
-        "value": best["total"],
-        "value_policy": (
-            f"min total among session runs (24h, same sf, same query "
-            f"count, zero errors, head at-or-after the newest commit "
-            f"touching mora_spark//bench.py/__spark_entry__.py) with "
-            f"env_probe multi_s <= {HEALTHY_MULTI_S} on both sides; "
-            "degraded=true means no run cleared the probe and value "
-            "is min among comparable runs instead"
-        ),
-        "head_gate": (
-            "worktree dirty: only this run pools"
-            if allowed_heads == frozenset()
-            else "git unavailable: exact-head match only"
-            if allowed_heads is None
-            else f"{len(allowed_heads)} commit(s) since last "
-            "perf-relevant change"
-        ),
-        "value_run_ts": best.get("ts"),
-        "degraded": degraded,
-        "this_run_total": total,
+        "value": round(sum(t for t in timings.values() if t >= 0), 3),
         "unit": "sec",
+        "n_queries": len(timings),
+        "n_errors": sum(1 for t in timings.values() if t < 0),
         "queries": timings,
         "heavy_policy": (
             "lower_median_of_3_above_5s; known-bimodal dedup/curation "
-            "lines widened to lower_median_of_5 (VERDICT r6 #7 fallback)"
+            "lines widened to lower_median_of_5"
         ),
         "prestaged": {
             name: "staging untimed (ingest-time cost); timed "
-            "line is the zero-exchange join"
+            "line is the repeated path"
             for name, *_ in PRESTAGED
         },
         "heavy_runs": heavy_runs,
-        "canary_runs": canary_runs,
-        "env_probe": {"before": env_before, "after": env_after},
-        # every same-sf full run of the last 24h (this one last):
-        # total + env probes, so degraded-host records carry their
-        # own adjudication context
-        "session_runs": [
-            {
-                k: r.get(k)
-                for k in ("ts", "total", "n_queries", "n_errors",
-                          "env_probe", "head")
-            }
-            for r in session_runs
-        ],
+        "env_probe": {"before": env_before, "after": _env_probe()},
         "sf": sf,
     }
-    # The driver's artifact keeps only a byte-bounded TAIL of stdout,
-    # and the full metrics line outgrew it in round 6 (the headline
-    # total and the first ~22 per-query lines were unrecoverable from
-    # BENCH_r06.json). Three-way emit so every number survives:
-    # 1. the full line, for anyone reading stdout live;
-    # 2. bench_full.json next to this script, the committed
-    #    audit-recoverable record of every per-query line;
-    # 3. a compact FINAL line that always fits the tail — the
-    #    verdict-bearing total plus the slowest lines.
+    # The full record goes to stdout and bench_full.json; the compact
+    # last line (~66 timing entries, ~1.7 KB) carries the total and the
+    # per-query map for readers that keep only a short tail of stdout.
     print(json.dumps(full))
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -630,36 +352,12 @@ def main() -> None:
         "w",
     ) as f:
         json.dump(full, f, indent=1)
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:8]
-    )
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total_wall",
-                "value": best["total"],
-                "degraded": degraded,
-                "this_run_total": total,
-                "unit": "sec",
-                "n_queries": len(timings),
-                "n_errors": sum(1 for t in timings.values() if t < 0),
-                # The FULL per-query map (docstring contract, and what
-                # the driver's per-query round-over-round diff and the
-                # 8-vs-32-core scaling table parse — both were empty in
-                # PERF_r17 because this line carried only the top-8
-                # `slowest`). ~66 compact entries ≈ 1.7 KB: far inside
-                # the driver's stdout-tail byte budget that motivated
-                # the three-way emit (the round-6 overflow came from
-                # session_runs/heavy_runs/policy strings, not from the
-                # timing map itself). `slowest` stays for human eyes.
-                "queries": timings,
-                "slowest": slowest,
-                "env_probe_multi_s": [
-                    full["env_probe"]["before"]["multi_s"],
-                    full["env_probe"]["after"]["multi_s"],
-                ],
-                "full_metrics": "bench_full.json",
-                "sf": sf,
+                k: full[k]
+                for k in ("metric", "value", "unit", "n_queries",
+                          "n_errors", "queries", "sf")
             }
         )
     )

@@ -668,12 +668,7 @@ class CandleStore:
         self._fs.rmtree(staging)
         return entries
 
-    def write(
-        self,
-        df: DataFrame,
-        mode: str = "merge",
-        touched_spans: dict[tuple[str, ...], tuple[int, int]] | None = None,
-    ) -> None:
+    def write(self, df: DataFrame, mode: str = "merge") -> None:
         """Upsert (``merge``) or blind-append (``append``) a batch.
 
         merge: for every (market, candle_length, code, year) partition
@@ -684,11 +679,6 @@ class CandleStore:
         read nor rewritten. Concurrent writers serialize through the
         manifest CAS: the loser recomputes against the winner's
         snapshot, so no committed row is ever lost.
-
-        ``touched_spans`` maps each partition tuple the batch touches
-        to the batch's (min, max) ts in epoch micros there; its keys
-        ARE the touched set. A caller that already knows it passes it
-        and skips the batch aggregation that would compute it.
         """
         batch = self._normalize(df)
         if mode == "append":
@@ -733,16 +723,12 @@ class CandleStore:
 
         # Partition tuple count is bounded (series x years), so the
         # collect and the driver-side manifest pruning stay small even
-        # for huge row counts. A caller that already KNOWS the touched
-        # spans (derive_rollup: the bucket grid it collected to build
-        # the semi-join) passes them in and skips this evaluation — for
-        # a derived batch it would replay the whole read-back +
-        # resample chain just to rediscover the same keys. ONE
-        # aggregation returns the partition set AND its per-partition
-        # ts span, so the read-back below can skip files whose stats
-        # range cannot collide with the batch.
-        if touched_spans is None:
-            touched_spans = {
+        # for huge row counts. ONE aggregation returns the partition set
+        # AND its per-partition ts span, so the read-back can skip files
+        # whose stats range cannot collide with the batch.
+        self._merge(
+            batch,
+            {
                 tuple(str(r[c]) for c in CANDLE_PARTITIONS): (
                     r["__lo"], r["__hi"]
                 )
@@ -752,7 +738,19 @@ class CandleStore:
                     F.max(F.unix_micros("ts")).alias("__hi"),
                 )
                 .collect()
-            }
+            },
+        )
+
+    def _merge(
+        self,
+        batch: DataFrame,
+        touched_spans: dict[tuple[str, ...], tuple[int, int]],
+    ) -> None:
+        """The LWW merge of a normalized ``batch``. ``touched_spans``
+        maps EVERY partition tuple the batch has rows in to the batch's
+        (min, max) ts in epoch micros there: a partition missing from
+        it would keep its old pointer next to the new page, and a span
+        narrower than the batch would carry colliding files unmerged."""
 
         def _collides(e: dict, t: tuple[str, ...]) -> bool:
             # A carried (neither re-read nor rewritten) file must be
@@ -1118,14 +1116,13 @@ class CandleStore:
         # rows for exactly these keys -> partitions (market,
         # target_length, code, year(bucket)). Deriving them from the
         # TINY bucket table (one single-slice job; F.year keeps the
-        # session-tz semantics of _normalize's year column) lets
-        # write() skip its distinct-collect, which would re-evaluate
-        # the whole read-back + resample chain once more per
-        # micro-batch just to rediscover the same keys. The same
-        # aggregation yields each partition's bucket span — resampled
-        # rows carry ts = bucket start, so [min, max] bucket per
-        # partition is exactly the span write() needs to file-prune
-        # ITS read-back of the derived series.
+        # session-tz semantics of _normalize's year column) skips
+        # write()'s span aggregation, which would re-evaluate the whole
+        # read-back + resample chain once more per micro-batch just to
+        # rediscover the same keys. The same aggregation yields each
+        # partition's bucket span — resampled rows carry ts = bucket
+        # start, so [min, max] bucket per partition is exactly the span
+        # _merge needs to file-prune ITS read-back of the derived series.
         grid = (
             touched.groupBy(
                 "market",
@@ -1138,9 +1135,11 @@ class CandleStore:
             )
             .collect()
         )
-        self.write(
-            resample(affected, target_length_s, anchor_s=anchor_s),
-            touched_spans={
+        self._merge(
+            self._normalize(
+                resample(affected, target_length_s, anchor_s=anchor_s)
+            ),
+            {
                 (r["market"], str(target_length_s), r["code"], str(r["y"])):
                 (r["__lo"], r["__hi"])
                 for r in grid

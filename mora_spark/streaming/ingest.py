@@ -244,7 +244,6 @@ def stream_store_merge(
     work_dir: str,
     store_path: str,
     rollup_lengths: tuple[int, ...] = (),
-    batch_stats: list[dict] | None = None,
 ):
     """Streaming candle aggregation upserted into the persistent
     :class:`~mora_spark.engine.CandleStore` — mora's late-backfill path
@@ -264,15 +263,10 @@ def stream_store_merge(
     listed target length. Both the merge and the bucket recompute are
     idempotent, so checkpoint-replayed batches (exactly-once under
     at-least-once delivery) and late backfill converge to the same
-    coarse series a from-scratch resample would produce.
-
-    ``batch_stats`` (when given) collects one dict per micro-batch —
-    ``{"batch_id", "rows", "merge_s", "rollup_s"}`` — the evidence
-    surface for the continuous-aggregate scale contract: per-batch
-    maintenance wall must track the BATCH, not the accumulated series
-    (``tools/scale_probe.py`` prints the curve).
+    coarse series a from-scratch resample would produce. Per-batch
+    maintenance wall is the sink's ``durationMs["addBatch"]`` in the
+    stream's progress events (``tools/scale_probe.py`` prints the curve).
     """
-    import time as _time
     from mora_spark.engine import CandleStore
 
     ckpt = os.path.join(work_dir, "ckpt_store_merge")
@@ -314,21 +308,9 @@ def stream_store_merge(
         # from the state store. Always persist for the batch's lifetime.
         candles = candles.persist()
         try:
-            n = candles.count() if batch_stats is not None else None
-            t0 = _time.time()
             store.write(candles, mode="merge")
-            t1 = _time.time()
             for length in rollup_lengths:
                 store.derive_rollup(candles, length)
-            if batch_stats is not None:
-                batch_stats.append(
-                    {
-                        "batch_id": batch_id,
-                        "rows": n,
-                        "merge_s": round(t1 - t0, 3),
-                        "rollup_s": round(_time.time() - t1, 3),
-                    }
-                )
         finally:
             candles.unpersist()
 

@@ -37,7 +37,6 @@ def stream_curate_jsonl(
     template: DataFrame,
     threshold: float = 0.8,
     gate: Callable[[DataFrame], DataFrame] | None = None,
-    batch_stats: list | None = None,
     n_files: int = 1,
     seed_index_path: str | None = None,
 ) -> tuple[DataFrame, int]:
@@ -51,11 +50,8 @@ def stream_curate_jsonl(
     sizes set it to batch_rows / target_rows_per_file. Layout only:
     the unit of overwrite stays the ``batch_id=`` directory.
 
-    ``batch_stats`` (optional, probe-only): appends one
-    ``{"batch_id", "rows", "wall_s"}`` dict per micro-batch so the
-    scale probe can assert per-batch cost tracks BATCH size, not the
-    accumulated corpus (adds one count job per batch; leave None in
-    production).
+    Per-batch rows and sink wall are in the stream's progress events
+    (``numInputRows``, ``durationMs["addBatch"]``).
 
     ``seed_index_path`` (optional): a prebuilt ``save_minhash_index``
     corpus the stream additionally dedups against; the banding family
@@ -76,9 +72,6 @@ def stream_curate_jsonl(
     )
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
         good = batch.where(F.col(CORRUPT_COL).isNull())
         if gate is not None:
             good = gate(good)
@@ -100,14 +93,6 @@ def stream_curate_jsonl(
             ),
             n_files=n_files,
         )
-        if batch_stats is not None:
-            batch_stats.append(
-                {
-                    "batch_id": batch_id,
-                    "rows": good.count(),
-                    "wall_s": round(_time.time() - t0, 3),
-                }
-            )
 
     stream = read_jsonl_stream(spark, src, template, max_files_per_trigger=1)
     with _state_partitions(spark, 8):

@@ -67,3 +67,25 @@ def test_build_schedules_match_committed_baseline():
         f"\n{proc.stderr[-2000:]}"
     )
     assert "match the baseline" in proc.stdout
+
+
+def test_repeated_counts_of_one_tree_agree(spark, sf_dir):
+    """Two ``measure()`` calls in one process count the same query the
+    same: neither the on-disk caches the first run leaves behind nor
+    its job group may leak into the second count."""
+    import importlib.util
+
+    import __spark_entry__ as entry_mod
+
+    spec = importlib.util.spec_from_file_location(
+        "ab_jobs", os.path.join(ROOT, "tools", "ab_jobs.py")
+    )
+    ab_jobs = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab_jobs)
+    queries = entry_mod.queries()
+    q = "q_stream_store_merge"
+    first = ab_jobs.measure(spark, queries, sf_dir, [q])[q]
+    second = ab_jobs.measure(spark, queries, sf_dir, [q])[q]
+    assert (first["jobs"], first["stages"]) == (
+        second["jobs"], second["stages"]
+    )

@@ -1,9 +1,8 @@
-"""Noise-free twin of ab_bench.py for the ANN build-path A/B
-(VERDICT r11 #2): instead of wall clocks, count the Spark jobs /
-stages / tasks a query schedules — deterministic on a fixed tree +
-sf, immune to host contention. A build-path regression that survives
-probe normalization should show up here as extra jobs (an extra scan,
-a lost persist) or extra stages (a new exchange). Usage:
+"""Noise-free schedule check: instead of wall clocks, count the Spark
+jobs / stages / tasks a query schedules — deterministic on a fixed
+tree + sf, immune to host contention. A build-path regression shows up
+here as extra jobs (an extra scan, a lost persist) or extra stages (a
+new exchange). Usage:
 
     python tools/ab_jobs.py <repo_root> <sf_dir> <query> [query ...]
     python tools/ab_jobs.py --record <baseline.json> <root> <sf> <q...>
@@ -12,9 +11,7 @@ a lost persist) or extra stages (a new exchange). Usage:
 ``--record`` writes the counts to a committed baseline file;
 ``--assert`` replays the baseline's query list (same order — the
 session-shared build caches make order part of the contract) at its
-recorded sf and exits 1 on any jobs/stages drift (VERDICT r12 #4: the
-tripwire that catches a build-path regression in one noise-free run
-instead of three rounds of wall-clock forensics). Tasks are reported
+recorded sf and exits 1 on any jobs/stages drift. Tasks are reported
 but NOT asserted — task counts follow file splits, which testdata
 regeneration may legitimately change; an exchange gained or a persist
 lost shows in jobs/stages.
@@ -24,7 +21,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
+import uuid
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -52,48 +52,66 @@ class _StreamRuns(StreamingQueryListener):
 
 
 def measure(spark, queries, sf_dir: str, names: list[str]) -> dict:
-    """Run each query (noop sink) under its own job group and return
-    {name: {jobs, stages, tasks}} from the status tracker: the jobs of
-    the query's group, of the streams it started, and any job without
-    a group (e.g. from a thread that did not inherit one) it launched."""
+    """Run each query (noop sink) under a job group of its own and
+    return {name: {jobs, stages, tasks}} from the status tracker: the
+    jobs of the query's group, of the streams it started, and any job
+    without a group (e.g. from a thread that did not inherit one) it
+    launched.
+
+    Counts depend on the tree, not on earlier state: each call runs its
+    queries under a fresh, empty scratch root (so every on-disk cache a
+    query builds, like the streaming replay source, is built inside the
+    count), with the session's LSH memo cleared, and every counted run
+    gets a job group no earlier run used."""
+    from mora_spark.llm.dedup import clear_lsh_cache
+    from mora_spark.queries import store as store_queries
+
     sc = spark.sparkContext
     st = sc.statusTracker()
     runs = _StreamRuns()
     spark.streams.addListener(runs)
+    clear_lsh_cache()
+    saved_scratch = store_queries.SCRATCH
+    store_queries.SCRATCH = tempfile.mkdtemp(prefix="ab_jobs_scratch_")
     out: dict[str, dict[str, int]] = {}
-    for name in names:
-        runs.run_ids.clear()
-        ungrouped = set(st.getJobIdsForGroup(None))
-        sc.setJobGroup(name, name)
-        try:
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:  # pragma: no cover
-            print(f"ab_jobs error {name}: {exc}", file=sys.stderr)
-            continue
-        finally:
-            sc.setJobGroup("", "")
-        jobs = list(st.getJobIdsForGroup(name))
-        for run_id in runs.run_ids:
-            jobs += st.getJobIdsForGroup(run_id)
-        jobs += set(st.getJobIdsForGroup(None)) - ungrouped
-        n_stages = n_tasks = 0
-        for j in jobs:
-            ji = st.getJobInfo(j)
-            if ji is None:
+    try:
+        for name in names:
+            runs.run_ids.clear()
+            ungrouped = set(st.getJobIdsForGroup(None))
+            group = f"{name}:{uuid.uuid4().hex}"
+            sc.setJobGroup(group, name)
+            try:
+                queries[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            except Exception as exc:  # pragma: no cover
+                print(f"ab_jobs error {name}: {exc}", file=sys.stderr)
                 continue
-            for sid in ji.stageIds:
-                si = st.getStageInfo(sid)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
-        out[name] = {
-            "jobs": len(jobs),
-            "stages": n_stages,
-            "tasks": n_tasks,
-        }
-    spark.streams.removeListener(runs)
+            finally:
+                sc.setJobGroup("", "")
+            jobs = list(st.getJobIdsForGroup(group))
+            for run_id in runs.run_ids:
+                jobs += st.getJobIdsForGroup(run_id)
+            jobs += set(st.getJobIdsForGroup(None)) - ungrouped
+            n_stages = n_tasks = 0
+            for j in jobs:
+                ji = st.getJobInfo(j)
+                if ji is None:
+                    continue
+                for sid in ji.stageIds:
+                    si = st.getStageInfo(sid)
+                    if si is not None:
+                        n_stages += 1
+                        n_tasks += si.numTasks
+            out[name] = {
+                "jobs": len(jobs),
+                "stages": n_stages,
+                "tasks": n_tasks,
+            }
+    finally:
+        shutil.rmtree(store_queries.SCRATCH, ignore_errors=True)
+        store_queries.SCRATCH = saved_scratch
+        spark.streams.removeListener(runs)
     return out
 
 
@@ -111,11 +129,15 @@ def main() -> None:
     else:
         sf_dir, names = argv[1], argv[2:]
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from _ab_common import bootstrap_tree
+    # Measure the tree at ``root``: its package and its query registry.
+    sys.path.insert(0, root)
+    os.chdir(root)
+    from mora_spark.session import get_spark
+    import __spark_entry__ as entry_mod
 
-    spark, queries = bootstrap_tree(root)
-    counts = measure(spark, queries, sf_dir, names)
+    spark = get_spark(app_name="ab_tool")
+    spark.sparkContext.setLogLevel("ERROR")
+    counts = measure(spark, entry_mod.queries(), sf_dir, names)
 
     for name, c in counts.items():
         print("ABJOBS " + json.dumps({"root": root, "q": name, **c}))
