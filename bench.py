@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints TWO
-JSON lines: the full record (also written to ``bench_full.json``), then
+JSON lines: the full record (also written to the untracked
+``.bench_out/bench_full.json``), then
 a compact last line {"metric", "value", "unit", "n_queries", "n_errors",
 "queries", "sf"} whose ``value`` is this run's total over the lines
 that ran without error.
@@ -342,15 +343,16 @@ def main() -> None:
         "env_probe": {"before": env_before, "after": _env_probe()},
         "sf": sf,
     }
-    # The full record goes to stdout and bench_full.json; the compact
-    # last line (~66 timing entries, ~1.7 KB) carries the total and the
-    # per-query map for readers that keep only a short tail of stdout.
+    # The full record goes to stdout and .bench_out/bench_full.json
+    # (ignored, so a run leaves the tree clean); the compact last line
+    # (~66 timing entries, ~1.7 KB) carries the total and the per-query
+    # map for readers that keep only a short tail of stdout.
     print(json.dumps(full))
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_full.json"),
-        "w",
-    ) as f:
+    out_dir = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), ".bench_out"
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, "bench_full.json"), "w") as f:
         json.dump(full, f, indent=1)
     print(
         json.dumps(

@@ -12,6 +12,11 @@ Two tiers (SURVEY north star):
 from __future__ import annotations
 
 import hashlib
+import os
+import re
+import threading
+from decimal import ROUND_HALF_UP, Decimal
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -20,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast, pandas_udf
 
-from mora_spark.functions.vectors import as_double, cosine, dot, l2_norm
+from mora_spark.functions.vectors import cosine, dot, l2_norm
 from mora_spark.localdf import tiny_df
 
 
@@ -34,6 +39,65 @@ def _filtered(df: DataFrame, predicate: str | Column | None) -> DataFrame:
     return df.where(
         F.expr(predicate) if isinstance(predicate, str) else predicate
     )
+
+
+def _isin(col: str, values) -> Column:
+    """``col IN (v, ...)`` over integer values as ONE SQL expression
+    (``Column.isin`` pays a py4j call per literal); none is ``false``."""
+    if not len(values):
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(str(int(v)) for v in values)})")
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """Spark's ``round(x, 6)`` on doubles, vectorized: HALF_UP on the
+    double's shortest decimal string (``BigDecimal.valueOf``), so
+    5e-7 rounds to 1e-6 although the double lies below the tie, and a
+    rounded zero is +0.0. ``rint(x * 1e6) / 1e6`` is that answer except
+    within a few ulps of a tie (or beyond 2**52 / 1e6); those values
+    take the decimal route."""
+    x = np.asarray(x, dtype=np.float64)
+    y = x * 1e6
+    out = np.rint(y) / 1e6
+    odd = np.isfinite(y) & (
+        (np.abs(y - np.floor(y) - 0.5) <= 4 * np.spacing(np.abs(y)) + 1e-9)
+        | (np.abs(y) >= 2.0**52)
+    )
+    for i in zip(*np.nonzero(odd)):
+        out[i] = float(
+            Decimal(repr(float(x[i]))).quantize(
+                Decimal("1e-6"), rounding=ROUND_HALF_UP
+            )
+        )
+    return out + 0.0
+
+
+def _cosine_rows(qv: np.ndarray, mat: np.ndarray) -> np.ndarray:
+    """``round(functions.vectors.cosine(qv, row), 6)`` per row of
+    ``mat`` with its arithmetic: left-to-right dot products from 0.0."""
+
+    def dot(a, b):
+        acc = np.zeros(np.broadcast(a, b).shape[:-1])
+        for j in range(a.shape[-1]):
+            acc = acc + a[..., j] * b[..., j]
+        return acc
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _round6(
+            dot(qv, mat) / (np.sqrt(dot(qv, qv)) * np.sqrt(dot(mat, mat)))
+        )
+
+
+def _vectors(vs: pd.Series) -> np.ndarray:
+    """An array column's batch as one float64 (n, dim) matrix."""
+    return np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit length; all-zero rows stay zero."""
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return m / norms
 
 
 def derive_srp_bits(n: int) -> int:
@@ -221,7 +285,7 @@ def with_srp_bucket(
 
     @pandas_udf(T.IntegerType())
     def bucket(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
+        m = _vectors(vs)
         signs = (m @ planes.T) > 0  # (n, n_bits)
         weights = (1 << np.arange(n_bits)).astype(np.int64)
         return pd.Series((signs @ weights).astype("int32"))
@@ -248,7 +312,7 @@ def with_srp_bands(
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def bands(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
+        m = _vectors(vs)
         signs = (m @ planes.T) > 0  # (n, n_bands*n_bits)
         per_band = signs.reshape(len(m), n_bands, n_bits) @ weights
         return pd.Series(list(per_band.astype("int32")))
@@ -348,27 +412,18 @@ def train_ivf_centroids(
     for _ in range(n_iter):
         planes = cents  # capture by value for the UDF closure
 
-        # One mapInPandas pass per iteration: assign AND accumulate
-        # inside the Arrow boundary (the _opq_cross_cov partial-sum
-        # shape), yielding <= n_cells tiny rows per TASK instead of
-        # pushing n_rows x dim exploded rows through a hash aggregate
-        # (guide §2.3 aggregate-before-you-shuffle / §4.2 batch the
-        # heavy lifting in native code). The collect is bounded by
-        # tasks x n_cells; the driver finishes the reduction.
+        # One mapInPandas pass per iteration assigns AND accumulates
+        # in the Arrow boundary: <= n_cells rows per TASK (not
+        # n_rows x dim exploded rows through a hash aggregate); the
+        # driver finishes the reduction.
         def cell_partials(batches):
             psums = np.zeros((n_cells, dim))
             pcnt = np.zeros(n_cells, dtype="int64")
             for pdf in batches:
                 if not len(pdf):
                     continue
-                m = np.stack(
-                    pdf[vec_col].apply(
-                        lambda v: np.asarray(v, dtype=np.float64)
-                    )
-                )
-                norms = np.linalg.norm(m, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                cells_b = np.argmax((m / norms) @ planes.T, axis=1)
+                m = _vectors(pdf[vec_col])
+                cells_b = np.argmax(_unit_rows(m) @ planes.T, axis=1)
                 for c in np.unique(cells_b):
                     psums[c] += m[cells_b == c].sum(axis=0)
                 pcnt += np.bincount(cells_b, minlength=n_cells)
@@ -421,12 +476,9 @@ def train_ivf_centroids(
 
             @pandas_udf(T.DoubleType())
             def max_sim(vs: pd.Series) -> pd.Series:
-                m = np.stack(
-                    vs.apply(lambda v: np.asarray(v, dtype=np.float64))
+                return pd.Series(
+                    np.max(_unit_rows(_vectors(vs)) @ occ.T, axis=1)
                 )
-                norms = np.linalg.norm(m, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                return pd.Series(np.max((m / norms) @ occ.T, axis=1))
 
             far = (
                 embeddings.select(
@@ -498,24 +550,15 @@ def ivf_topk(
     else:
         cents = _hyperplanes(dim, n_cells, seed="ivf")
 
-    @pandas_udf(T.IntegerType())
-    def nearest_cell(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (m / norms) @ cents.T  # (n, n_cells), cents are unit
-        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
-
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def probe_cells(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (m / norms) @ cents.T
+        sims = _unit_rows(_vectors(vs)) @ cents.T
         top = np.argsort(-sims, axis=1)[:, :n_probe].astype("int32")
         return pd.Series(list(top))
 
-    assigned = embeddings.withColumn("cell", nearest_cell(F.col(vec_col)))
+    assigned = embeddings.withColumn(
+        "cell", _cell_assigner(cents)(F.col(vec_col))
+    )
     q = (
         assigned.where(F.col(id_col).isin(query_ids))
         .select(
@@ -751,14 +794,21 @@ def _cell_assigner(cents: np.ndarray):
 
     @pandas_udf(T.IntegerType())
     def nearest_cell(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
         return pd.Series(
-            np.argmax((m / norms) @ cents.T, axis=1).astype("int32")
+            np.argmax(_unit_rows(_vectors(vs)) @ cents.T, axis=1).astype(
+                "int32"
+            )
         )
 
     return nearest_cell
+
+
+def _save_centroids(spark, cents: np.ndarray, path: str) -> None:
+    tiny_df(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
+        "cell int, centroid array<double>",
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def save_ivf_index(
@@ -768,12 +818,7 @@ def save_ivf_index(
     BY CELL — so probing n_probe cells at query time is Hive partition
     pruning (only those directories are even listed), the on-disk
     analogue of an inverted file's posting lists."""
-    spark = assigned.sparkSession
-    tiny_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _save_centroids(assigned.sparkSession, cents, path)
     # One file per cell (see save_ivfpq_index): the shuffle keyed on
     # the partition column replaces an n_tasks x n_cells file spray
     # with the compacted layout the probe reads.
@@ -782,12 +827,90 @@ def save_ivf_index(
     ).mode("overwrite").parquet(f"{path}/cells")
 
 
-def load_ivf_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
+# --- the resident index handle ---
+# A persisted IVF/IVFPQ index is served like a page index held across
+# requests: every reader (search, add, health, compaction) goes through
+# _load_index. The stamp is the file listing of centroids/, codebooks/
+# and cells/; every writer (save, add, a replayed add, compaction into
+# the path) writes part files under fresh names, so any change to the
+# index changes it.
+
+
+class _Index(NamedTuple):
+    stamp: tuple  # sorted (subdir, relative file, length)
+    cents: np.ndarray
+    books: np.ndarray | None  # None for a plain IVF index
+    cells: DataFrame  # postings, without IVFPQ's add_id epoch column
+
+
+_INDEX_CACHE: dict[tuple, _Index] = {}
+_INDEX_CACHE_MAX = 8  # indexes held per process, least recently loaded out
+_INDEX_LOCK = threading.Lock()
+
+
+def _index_stamp(path: str) -> tuple:
+    """Sorted ``(subdir, relative file, length)`` listing of an index's
+    model and posting files (``sources.hadoopfs`` for ``scheme://``
+    roots)."""
+    out = []
+    for sub in ("centroids", "codebooks", "cells"):
+        root = f"{path}/{sub}"
+        if "://" in path:
+            from mora_spark.sources.hadoopfs import list_files
+
+            try:
+                files = list_files(root, "")
+            except FileNotFoundError:
+                continue
+            out += [(sub, f.rsplit(f"/{sub}/", 1)[-1], n) for f, n in files]
+        else:
+            for d, _, names in os.walk(root):
+                for f in (os.path.join(d, n) for n in names):
+                    out.append(
+                        (sub, os.path.relpath(f, root), os.path.getsize(f))
+                    )
+    return tuple(sorted(out))
+
+
+def _load_index(spark, path: str) -> _Index:
+    """The index at ``path``, loaded once per (session, path, stamp).
+    The listing is taken BEFORE the load, so a write racing the load
+    can only make the next call reload, never serve a stale handle."""
+    stamp = _index_stamp(path)
+    key = (spark, path)
+    idx = _INDEX_CACHE.get(key)
+    if idx is not None and idx.stamp == stamp:
+        return idx
     rows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.zeros((len(rows), len(rows[0]["centroid"])))
-    for r in rows:
-        cents[r["cell"]] = r["centroid"]
-    return cents, spark.read.parquet(f"{path}/cells")
+    cents = np.array(
+        [r["centroid"] for r in sorted(rows, key=lambda r: r["cell"])]
+    )
+    books = None
+    if any(sub == "codebooks" for sub, _, _ in stamp):
+        rows = spark.read.parquet(f"{path}/codebooks").collect()
+        m = 1 + max(r["m"] for r in rows)
+        rows.sort(key=lambda r: (r["m"], r["code"]))
+        books = np.array([r["centroid"] for r in rows])
+        books = books.reshape(m, len(rows) // m, -1)
+    cells = spark.read.parquet(f"{path}/cells").drop("add_id")
+    idx = _Index(stamp, cents, books, cells)
+    with _INDEX_LOCK:
+        _INDEX_CACHE.pop(key, None)
+        _INDEX_CACHE[key] = idx
+        while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
+            del _INDEX_CACHE[next(iter(_INDEX_CACHE))]
+    return idx
+
+
+def load_ivf_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
+    idx = _load_index(spark, path)
+    return idx.cents, idx.cells
+
+
+def _probe_cells(qv: np.ndarray, cents: np.ndarray, n_probe: int):
+    """The query's ``n_probe`` nearest cells (normalized dot product)."""
+    nv = qv / (np.linalg.norm(qv) or 1.0)
+    return np.argsort(-(nv @ cents.T))[:n_probe]
 
 
 def ivf_index_add(
@@ -800,22 +923,28 @@ def ivf_index_add(
     cell layout. Probing is unchanged — ``ivf_index_topk`` still prunes
     to n_probe cell directories, which now include the new postings.
     At scale the append writes only the cells the batch lands in, so
-    maintenance cost follows the BATCH, not the index size. The new
-    vectors are cast to the index's element type (same dtype contract
-    as :func:`ivf_index_topk`: a float32 index must not silently grow
-    float64 postings, or scores could diverge in the rounded 6th
-    decimal)."""
+    maintenance cost follows the BATCH, not the index size."""
     cents, assigned = load_ivf_index(spark, path)
-    data_cols = [c for c in assigned.columns if c != "cell"]
-    elem = assigned.schema[vec_col].dataType.elementType.simpleString()
-    batch = new_vectors.select(*data_cols).withColumn(
-        vec_col, F.col(vec_col).cast(f"array<{elem}>")
-    )
     (
-        batch.withColumn("cell", _cell_assigner(cents)(F.col(vec_col)))
+        _postings_like(assigned, new_vectors, vec_col)
+        .withColumn("cell", _cell_assigner(cents)(F.col(vec_col)))
         .write.partitionBy("cell")
         .mode("append")
         .parquet(f"{path}/cells")
+    )
+
+
+def _postings_like(
+    cells: DataFrame, new_vectors: DataFrame, vec_col: str
+) -> DataFrame:
+    """``new_vectors`` as postings of an index: its data columns, the
+    vector cast to the index's element type (a float32 index must not
+    silently grow float64 postings, or scores could diverge in the
+    rounded 6th decimal)."""
+    cols = [c for c in cells.columns if c not in ("cell", "pq_code")]
+    elem = cells.schema[vec_col].dataType.elementType.simpleString()
+    return new_vectors.select(*cols).withColumn(
+        vec_col, F.col(vec_col).cast(f"array<{elem}>")
     )
 
 
@@ -866,31 +995,23 @@ def ivf_index_compact(
     """Maintenance for an incrementally-grown IVF index, mirroring
     ``compact_stream_index`` for the LSH index: rewrite the cell layout
     at ``dest`` with ONE file per cell (each ``ivf_index_add`` appends
-    its own file set, so a long-lived index fragments into
-    increments-many small files per cell), and — when the cell-size
-    imbalance ratio max/mean exceeds ``retrain_imbalance`` — RE-TRAIN
-    the centroids on the current corpus and re-assign, since heavy
-    drift means the ingested distribution no longer matches what the
-    centroids were trained on and probes over oversized cells scan far
-    more postings than n_probe/n_cells of the corpus.
+    its own file set), and — when the cell-size imbalance ratio
+    max/mean exceeds ``retrain_imbalance``, i.e. the ingested
+    distribution drifted from the trained centroids — RE-TRAIN the
+    centroids on the current corpus and re-assign.
 
     Writing to ``dest`` (never in place) keeps readers of ``path``
-    consistent mid-compaction; the production cadence is
-    add* → compact → point probes at the compacted copy, the same
-    epoch loop as stream → compact → seed for the dedup index.
-    Retraining is the deterministic spherical k-means of the original
-    build, and assignment normalizes the vector first — so planted/
-    scaled duplicates keep landing in their source vector's cell and
-    probe recall is preserved across a retrain (the property
-    tests/test_simsearch.py pins). Returns the health stats observed
-    plus whether the retrain branch ran."""
+    consistent mid-compaction (add* → compact → point probes at the
+    compacted copy). Retraining is the deterministic spherical k-means
+    of the original build, and assignment normalizes the vector first,
+    so scaled duplicates keep landing in their source vector's cell
+    and probe recall survives a retrain (tests/test_simsearch.py).
+    Returns the health stats observed plus whether it retrained."""
     cents, assigned = load_ivf_index(spark, path)
     cents, assigned, stats = _compact_core(
         assigned, cents, retrain_imbalance, train_iters, vec_col
     )
-    # save_ivf_index owns the one-file-per-cell shuffle (r17: the base
-    # build writes the compacted layout too).
-    save_ivf_index(cents, assigned, dest)
+    save_ivf_index(cents, assigned, dest)  # one file per cell
     return stats
 
 
@@ -951,35 +1072,22 @@ def ivf_index_topk(
     vectors are fetched by id and probe cells computed driver-side —
     bounded by the request size, the natural client-query shape.
     ``n_probe=None`` sizes the probe budget to the LOADED index's cell
-    count (:func:`derive_ivf_probe`, ~√n_cells) — the query-side half
-    of the derived sizing: an index built with ``n_cells=None`` at
-    large n has far more cells than the fixed default, and probing a
-    fixed 4 of them would silently collapse the probed fraction.
+    count (:func:`derive_ivf_probe`, ~√n_cells), so an index built with
+    ``n_cells=None`` does not collapse the probed fraction.
 
-    ``predicate`` is FILTERED search (faiss's IDSelector / a vector
-    DB's metadata filter), the ``ivfpq_index_topk`` contract on the
-    simpler index tier: a SQL expression (or Column) over the posting
-    columns — they're stored in the cell parquet next to the vectors,
-    so the filter rides the SAME partition-pruned scan as a pushed
-    parquet predicate and k fills POST-filter (post-filtering an
-    unfiltered top-k would silently under-fill k)."""
+    ``predicate`` is FILTERED search, the ``ivfpq_index_topk``
+    contract: a SQL expression (or Column) over the posting columns,
+    pushed into the same partition-pruned scan, so k fills
+    POST-filter."""
     cents, assigned = load_ivf_index(spark, path)
     if n_probe is None:
         n_probe = derive_ivf_probe(len(cents))
-    qrows = (
-        assigned.where(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    probe = []
-    for r in qrows:
-        v = np.asarray(r[vec_col], dtype=np.float64)
-        nv = v / (np.linalg.norm(v) or 1.0)
-        cells = np.argsort(-(nv @ cents.T))[:n_probe]
-        probe.extend(
-            (int(r[id_col]), [float(x) for x in r[vec_col]], int(c))
-            for c in cells
-        )
+    queries = _query_vectors(assigned, query_ids, id_col, vec_col)
+    probe = [
+        (q, qv.tolist(), int(c))
+        for q, qv in queries.items()
+        for c in _probe_cells(qv, cents, n_probe)
+    ]
     # Rebuild query vectors under the INDEX's element type — a float32
     # index must not be silently upcast (nor a float64 one downcast, or
     # scores could diverge from ivf_topk in the rounded 6th decimal).
@@ -988,8 +1096,8 @@ def ivf_index_topk(
         spark, probe, f"query_id long, qv array<{elem}>, cell int"
     )
     pruned = assigned.where(
-        F.col("cell").isin(sorted({c for _, _, c in probe}))
-        & ~F.col(id_col).isin(query_ids)
+        _isin("cell", sorted({c for _, _, c in probe}))
+        & ~_isin(id_col, query_ids)
     )
     pruned = _filtered(pruned, predicate)
     cand = pruned.select(
@@ -1140,9 +1248,9 @@ def quantize_embeddings(
 # Quantization for Nearest Neighbor Search", TPAMI 2011; faiss's
 # IndexPQ): per query, an M x K table of exact
 # ||q_m - codeword||^2 distances is computed once driver-side, the
-# corpus is ranked by M table lookups per row (pure JVM: zip_with +
-# element_at over the stored code array — no Python, no floats read),
-# and only the shortlist is re-scored against full-precision vectors.
+# corpus is ranked by M table lookups per row in one Arrow pass (the
+# stored code array only, no floats read), and only the shortlist is
+# re-scored against full-precision vectors.
 #
 # Training follows the train_ivf_centroids discipline: seeded
 # deterministic Lloyd's per subspace, means rounded to 8 dp so the
@@ -1201,33 +1309,20 @@ def train_pq_codebooks(
     for _ in range(n_iter):
         cur = books  # capture by value for the closure
 
-        # One mapInPandas pass per iteration: encode AND accumulate the
-        # per-(subspace, code) sums inside the Arrow boundary (the
-        # _opq_cross_cov partial-sum shape), yielding <= M x K tiny
-        # rows per TASK instead of pushing n_rows x dim exploded rows
-        # through a hash aggregate (guide §2.3 / §4.2). The collect is
-        # bounded by tasks x M x K; the driver finishes the reduction.
+        # One mapInPandas pass per iteration encodes AND accumulates
+        # the per-(subspace, code) sums: <= M x K rows per TASK; the
+        # driver finishes the reduction (the train_ivf_centroids shape).
         def code_partials(batches):
             psums = np.zeros((m_subspaces, n_codes, dsub))
             pcnt = np.zeros((m_subspaces, n_codes), dtype="int64")
             for pdf in batches:
                 if not len(pdf):
                     continue
-                mat = np.stack(
-                    pdf[vec_col].apply(
-                        lambda v: np.asarray(v, dtype=np.float64)
-                    )
-                )
+                mat = _vectors(pdf[vec_col])
                 sub = mat.reshape(len(mat), m_subspaces, dsub)
                 for mi in range(m_subspaces):
                     x = sub[:, mi, :]
-                    c = cur[mi]
-                    d = (
-                        (x * x).sum(axis=1, keepdims=True)
-                        - 2.0 * (x @ c.T)
-                        + (c * c).sum(axis=1)
-                    )
-                    codes = np.argmin(d, axis=1)
+                    codes = _nearest_code(x, cur[mi])
                     for j in np.unique(codes):
                         psums[mi, j] += x[codes == j].sum(axis=0)
                     pcnt[mi] += np.bincount(codes, minlength=n_codes)
@@ -1270,39 +1365,46 @@ def train_pq_codebooks(
     return books
 
 
+def _nearest_code(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Per row of ``x`` (n, dsub), the nearest row of the subspace
+    codebook ``c`` (K, dsub): argmin ||x||^2 - 2 x @ C^T + ||c||^2."""
+    d = (
+        (x * x).sum(axis=1, keepdims=True)
+        - 2.0 * (x @ c.T)
+        + (c * c).sum(axis=1)
+    )
+    return np.argmin(d, axis=1)
+
+
+def _pq_codes(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, M) int32 PQ codes of the float rows ``mat``: per subspace,
+    the nearest code (one (n, K) distance matrix per subspace)."""
+    m_subspaces, _, dsub = books.shape
+    sub = mat.reshape(len(mat), m_subspaces, dsub)
+    out = np.empty((len(mat), m_subspaces), dtype="int32")
+    for m in range(m_subspaces):
+        out[:, m] = _nearest_code(sub[:, m, :], books[m])
+    return out
+
+
 def _pq_encoder(books: np.ndarray):
-    """Arrow-batched PQ encoding under fixed codebooks: per subspace,
-    the argmin-distance code. One (n, K) distance matrix per subspace
-    per Arrow batch — ||x||^2 - 2 x @ C^T + ||c||^2, argmin over K."""
-    m_subspaces, n_codes, dsub = books.shape
+    """Arrow-batched PQ encoding under fixed codebooks."""
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def codes_of(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        sub = mat.reshape(len(mat), m_subspaces, dsub)
-        out = np.empty((len(mat), m_subspaces), dtype="int32")
-        for m in range(m_subspaces):
-            x = sub[:, m, :]  # (n, dsub)
-            c = books[m]  # (K, dsub)
-            d = (
-                (x * x).sum(axis=1, keepdims=True)
-                - 2.0 * (x @ c.T)
-                + (c * c).sum(axis=1)
-            )
-            out[:, m] = np.argmin(d, axis=1)
-        return pd.Series(list(out))
+        return pd.Series(list(_pq_codes(_vectors(vs), books)))
 
     return codes_of
 
 
-def _assign_encoder(cents: np.ndarray, books: np.ndarray):
-    """Fused IVF cell assignment + PQ encoding under fixed models: one
-    Arrow batch in, one (cell, pq_code) struct column out. Exactly
-    `_cell_assigner(cents)` and `_pq_encoder(books)` composed — the
-    same normalized-argmax and per-subspace argmin-distance math — but
-    the float corpus crosses the Python boundary ONCE instead of once
-    per model (the IVFPQ build's encode+write pass)."""
-    m_subspaces, n_codes, dsub = books.shape
+def _with_cell_code(
+    df: DataFrame, cents: np.ndarray, books: np.ndarray, vec_col: str
+) -> DataFrame:
+    """Append ``cell`` and ``pq_code`` under fixed models in ONE Arrow
+    pass: exactly `_cell_assigner(cents)` and `_pq_encoder(books)`
+    composed, but the float corpus crosses the Python boundary once
+    instead of once per model (the IVFPQ build's and add's
+    encode+write pass)."""
 
     @pandas_udf(
         T.StructType(
@@ -1313,24 +1415,18 @@ def _assign_encoder(cents: np.ndarray, books: np.ndarray):
         )
     )
     def assign_encode(vs: pd.Series) -> pd.DataFrame:
-        mat = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cell = np.argmax((mat / norms) @ cents.T, axis=1).astype("int32")
-        sub = mat.reshape(len(mat), m_subspaces, dsub)
-        out = np.empty((len(mat), m_subspaces), dtype="int32")
-        for m in range(m_subspaces):
-            x = sub[:, m, :]
-            c = books[m]
-            d = (
-                (x * x).sum(axis=1, keepdims=True)
-                - 2.0 * (x @ c.T)
-                + (c * c).sum(axis=1)
-            )
-            out[:, m] = np.argmin(d, axis=1)
-        return pd.DataFrame({"cell": cell, "pq_code": list(out)})
+        mat = _vectors(vs)
+        cell = np.argmax(_unit_rows(mat) @ cents.T, axis=1).astype("int32")
+        return pd.DataFrame(
+            {"cell": cell, "pq_code": list(_pq_codes(mat, books))}
+        )
 
-    return assign_encode
+    return (
+        df.withColumn("__ae", assign_encode(F.col(vec_col)))
+        .withColumn("cell", F.col("__ae.cell"))
+        .withColumn("pq_code", F.col("__ae.pq_code"))
+        .drop("__ae")
+    )
 
 
 def pq_encode(
@@ -1351,126 +1447,172 @@ def pq_topk(
     vec_col: str = "embedding",
     predicate: str | Column | None = None,
 ) -> DataFrame:
-    """Two-stage PQ search: ADC shortlist, then exact re-rank.
-
-    Stage 1 reads ONLY the M-int code column (4 bytes/vector packed)
-    and scores each candidate with M JVM array lookups into the
-    query's distance table — broadcast with the (tiny, bounded by the
-    request) query set, computed driver-side exactly like
-    ivf_index_topk's probe cells. Stage 2 touches ``shortlist``
-    full-precision rows per query. ADC distances and final cosines
-    round to 6 dp with id tie-breaks, so the whole pipeline is
-    deterministic and oracle-comparable end-to-end.
+    """Two-stage PQ search: ADC shortlist, then exact re-rank. Stage 1
+    (:func:`_adc_stage`) encodes and scores the corpus in ONE Arrow
+    pass against per-query distance tables computed driver-side; stage
+    2 (:func:`_rerank`) fetches the shortlisted full-precision rows in
+    one scan and re-ranks them on the driver. ADC distances and
+    cosines round to 6 dp with id tie-breaks, so the pipeline is
+    deterministic and oracle-comparable end-to-end. Runs eagerly; the
+    returned frame holds the answer.
 
     ``predicate`` is FILTERED search (faiss's IDSelector / a vector
     DB's metadata filter): a SQL expression (or Column) over the
-    corpus's metadata columns restricting the candidate set — top-k is
-    filled post-filter, never by post-filtering an unfiltered top-k
-    (which silently under-fills k). It applies BEFORE encoding, so the
-    filter reaches the parquet scan as a pushed predicate and only
-    matching rows are encoded and scored.
+    corpus's metadata columns restricting the candidate set, so top-k
+    fills post-filter (post-filtering an unfiltered top-k silently
+    under-fills k). It applies BEFORE encoding, so it reaches the
+    parquet scan as a pushed predicate.
     """
-    m_subspaces, n_codes, _ = books.shape
-    src = _filtered(embeddings, predicate)
-    enc = pq_encode(src.select(id_col, vec_col), books, vec_col)
-    qrows = (
-        embeddings.where(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
+    queries = _query_vectors(embeddings, query_ids, id_col, vec_col)
+    cand = _filtered(embeddings, predicate).where(~_isin(id_col, query_ids))
+    cand = cand.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
     )
-    spark = embeddings.sparkSession
-    q = tiny_df(
-        spark,
-        _pq_query_rows(qrows, books, id_col, vec_col),
-        "query_id long, qv array<double>, dtable array<double>",
-    )
-    # Stage 1 projects (id, pq_code) ONLY — the float column must not
-    # ride through the ranking scan, or the 4-bytes/vector read
-    # contract is silently lost (the rerank joins it back for the
-    # shortlist below).
-    cand = enc.where(~F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("neighbor_id"), "pq_code"
-    )
-    scored = cand.crossJoin(broadcast(q)).withColumn(
-        "adc", _adc_expr(m_subspaces, n_codes)
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    short = scored.withColumn("arank", F.row_number().over(w1)).where(
-        F.col("arank") <= shortlist
-    )
-    full = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    )
-    rescored = full.join(
-        broadcast(short.select("query_id", "neighbor_id", "qv")),
-        "neighbor_id",
-    ).withColumn("score", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    short = _adc_stage(cand, books, queries, shortlist).toPandas()
+    return _rerank(embeddings, short, queries, k, id_col, vec_col)
 
 
-def _pq_query_rows(
-    qrows, books: np.ndarray, id_col: str, vec_col: str
-) -> list[tuple]:
-    """Driver-side (query_id, qv, flattened M x K ADC distance table)
-    rows — bounded by the request size, like ivf_index_topk's probe
-    computation."""
+def _query_vectors(
+    frame: DataFrame, query_ids: list[int], id_col: str, vec_col: str
+) -> dict[int, np.ndarray]:
+    """{query id: float64 vector} — one scan, bounded by the request."""
+    rows = frame.where(_isin(id_col, query_ids)).select(id_col, vec_col)
+    return {
+        int(r[0]): np.asarray(r[1], dtype=np.float64) for r in rows.collect()
+    }
+
+
+def _adc_table(qv: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The query's (M, K) ADC table: squared L2 distance from each
+    query subvector to each code of its subspace."""
     m_subspaces, n_codes, dsub = books.shape
-    flat = []
-    for r in qrows:
-        qv = np.asarray(r[vec_col], dtype=np.float64)
-        sub = qv.reshape(m_subspaces, dsub)
-        dt = np.empty((m_subspaces, n_codes))
-        for m in range(m_subspaces):
-            diff = books[m] - sub[m]
-            dt[m] = (diff * diff).sum(axis=1)
-        flat.append(
-            (
-                int(r[id_col]),
-                [float(x) for x in qv],
-                [float(x) for x in dt.ravel()],
-            )
-        )
-    return flat
+    sub = qv.reshape(m_subspaces, dsub)
+    dt = np.empty((m_subspaces, n_codes))
+    for m in range(m_subspaces):
+        diff = books[m] - sub[m]
+        dt[m] = (diff * diff).sum(axis=1)
+    return dt
 
 
-def _adc_expr(m_subspaces: int, n_codes: int):
-    """The asymmetric-distance column: M JVM array lookups into the
-    query's broadcast ``dtable``, summed and rounded to 6 dp (the
-    determinism grid every rank in this module uses)."""
-    lookup = F.zip_with(
-        F.col("pq_code"),
-        F.sequence(F.lit(0), F.lit(m_subspaces - 1)),
-        lambda c, m: F.element_at(
-            F.col("dtable"), (m * n_codes + c + F.lit(1)).cast("int")
-        ),
+def _adc_stage(
+    cand: DataFrame,
+    books: np.ndarray,
+    queries: dict[int, np.ndarray],
+    shortlist: int,
+    probes: dict[int, np.ndarray] | None = None,
+) -> DataFrame:
+    """Stage 1 of PQ search: the (query_id, neighbor_id, adc) frame of
+    each query's first ``shortlist`` candidates by (adc, id).
+
+    ``cand`` carries ``neighbor_id`` and either the stored ``pq_code``
+    or the float vector ``vec`` (encoded in the same pass), plus
+    ``cell`` when ``probes`` restricts each query to its own cells.
+    ONE mapInPandas kernel sums each query's ADC table over a posting's
+    codes in subspace order 0..M-1 from 0.0, rounds like Spark's
+    round(x, 6) (:func:`_round6`), drops postings outside the query's
+    probe cells and keeps the task's first ``shortlist`` per query; a
+    JVM window over those per-task shortlists (never over the candidate
+    set) keeps the global first ``shortlist``. The query tables travel
+    in the closure."""
+    qids = np.array(list(queries), dtype="int64")
+    tables = np.array([_adc_table(queries[q], books) for q in qids])
+    tables = tables.reshape(len(qids), *books.shape[:2])
+    allowed = None
+    if probes is not None:
+        width = max((int(c) for p in probes.values() for c in p), default=0)
+        allowed = np.zeros((len(qids), width + 1), dtype=bool)
+        for i, q in enumerate(qids):
+            allowed[i, probes[q]] = True
+    empty = pd.DataFrame(
+        {"query_id": qids[:0], "neighbor_id": qids[:0], "adc": np.empty(0)}
     )
-    return F.round(
-        F.aggregate(lookup, F.lit(0.0), lambda a, x: a + x), 6
+
+    def rank(batches):
+        best = empty
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if "pq_code" in pdf:
+                codes = np.stack(pdf["pq_code"].to_numpy())
+            else:
+                codes = _pq_codes(_vectors(pdf["vec"]), books)
+            adc = np.zeros((len(qids), len(pdf)))
+            for m in range(codes.shape[1]):
+                adc = adc + tables[:, m, codes[:, m]]
+            qi, row = np.nonzero(
+                np.ones(adc.shape, dtype=bool)
+                if allowed is None
+                else allowed[:, pdf["cell"].to_numpy()]
+            )
+            found = pd.DataFrame(
+                {
+                    "query_id": qids[qi],
+                    "neighbor_id": pdf["neighbor_id"].to_numpy()[row],
+                    "adc": _round6(adc[qi, row]),
+                }
+            )
+            best = (
+                pd.concat([best, found])
+                .sort_values(["query_id", "adc", "neighbor_id"])
+                .groupby("query_id")
+                .head(shortlist)
+            )
+        yield best
+
+    w = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
+    return (
+        cand.mapInPandas(
+            rank, "query_id long, neighbor_id long, adc double"
+        )
+        .withColumn("r", F.row_number().over(w))
+        .where(F.col("r") <= shortlist)
+        .drop("r")
+    )
+
+
+def _fetch_rows(frame: DataFrame, ids, id_col: str, vec_col: str):
+    """Stage 2's one scan: the shortlist's vectors, ``id IN`` pushed."""
+    return frame.where(_isin(id_col, ids)).select(id_col, vec_col)
+
+
+def _rerank(
+    frame: DataFrame,
+    short: pd.DataFrame,
+    queries: dict[int, np.ndarray],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Stage 2 of PQ search on the driver: fetch the shortlist's
+    vectors from ``frame`` and rank each query's shortlist by
+    round(cosine, 6) descending (NaN first, as Spark sorts it), ties by
+    id. Returns the (query_id, neighbor_id, score, rank) frame."""
+    ids = np.unique(short["neighbor_id"].to_numpy())
+    rows = _fetch_rows(frame, ids, id_col, vec_col).collect()
+    vecs = {r[0]: np.asarray(r[1], dtype=np.float64) for r in rows}
+    out = []
+    for q, grp in short.groupby("query_id"):
+        nid = grp["neighbor_id"].to_numpy()
+        score = _cosine_rows(queries[q], np.stack([vecs[n] for n in nid]))
+        order = np.lexsort((nid, -score, ~np.isnan(score)))[:k]
+        out += [
+            (int(q), int(nid[i]), float(score[i]), r + 1)
+            for r, i in enumerate(order)
+        ]
+    id_type = frame.schema[id_col].dataType.simpleString()
+    cols = ["query_id", "neighbor_id", "score", "rank"]
+    return frame.sparkSession.createDataFrame(
+        pd.DataFrame(out, columns=cols),
+        f"query_id long, neighbor_id {id_type}, score double, rank int",
     )
 
 
 # --- IVFPQ: the persisted 100 TB ANN layout (IVF pruning + PQ codes) ---
-# build_ivf_index prunes WHICH partitions a probe reads;
-# train_pq_codebooks shrinks WHAT stage 1 reads inside them. The
-# composed index is the standard IVFPQ posting-list design (faiss's
-# IndexIVFPQ): the corpus is cell-partitioned parquet whose postings
-# carry 4-byte PQ codes next to the full-precision vector column, a
-# probe prunes to n_probe cell directories (Hive partition pruning),
-# stage 1 ranks ONLY the (id, pq_code) columns by ADC table lookups
-# (columnar projection: the float vectors aren't read), and stage 2
-# re-ranks the shortlist at full precision. Per probed query at scale:
-# read bytes ~ (corpus/n_cells) * n_probe * 4 bytes/vector for the
-# candidate scan + shortlist full-precision rows for the re-rank.
+# faiss's IndexIVFPQ posting-list design: cell-partitioned parquet
+# whose postings carry 4-byte PQ codes next to the full-precision
+# vector. A probe prunes to n_probe cell directories, stage 1 reads
+# only (id, pq_code) there, stage 2 only the shortlist's floats: per
+# probed query ~ (corpus/n_cells) * n_probe * 4 bytes + shortlist rows.
 
 
 def build_ivfpq_index(
@@ -1484,8 +1626,8 @@ def build_ivfpq_index(
 ) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     """(cell centroids, PQ codebooks, assigned+encoded corpus). Both
     models train with the deterministic seeded discipline of their
-    standalone builders; the corpus pass appends ``cell`` and
-    ``pq_code`` in one Arrow-batched projection each."""
+    standalone builders; one Arrow pass over the corpus appends
+    ``cell`` and ``pq_code`` (:func:`_with_cell_code`)."""
     cents, _ = build_ivf_index(
         embeddings, n_cells=n_cells, train_iters=train_iters,
         dim=dim, vec_col=vec_col,
@@ -1494,21 +1636,7 @@ def build_ivfpq_index(
         embeddings, m_subspaces=m_subspaces, n_codes=n_codes,
         dim=dim, vec_col=vec_col,
     )
-    # Fuse cell assignment + PQ encoding into ONE Arrow pass: composed
-    # `_cell_assigner(...)` + `_pq_encoder(...)` columns each ship the
-    # full float corpus JVM->Python->JVM separately (two ArrowEvalPython
-    # nodes — r17 profile: the encode+write job dominated the IVFPQ
-    # build lines). Same math, same columns, half the boundary traffic
-    # (guide §4.1: you control how many times the bytes cross).
-    ae = _assign_encoder(cents, books)
-    both = embeddings.withColumn("__ae", ae(F.col(vec_col)))
-    return (
-        cents,
-        books,
-        both.withColumn("cell", F.col("__ae.cell"))
-        .withColumn("pq_code", F.col("__ae.pq_code"))
-        .drop("__ae"),
-    )
+    return cents, books, _with_cell_code(embeddings, cents, books, vec_col)
 
 
 def save_ivfpq_index(
@@ -1527,15 +1655,10 @@ def save_ivfpq_index(
     deterministic overwrite of its own epoch directory, never a blind
     append, so a crashed-and-replayed micro-batch converges instead of
     duplicating (the pipeline-sink discipline)."""
-    spark = assigned.sparkSession
-    tiny_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _save_centroids(assigned.sparkSession, cents, path)
     m, k, dsub = books.shape
     tiny_df(
-        spark,
+        assigned.sparkSession,
         [
             (mi, ji, [float(x) for x in books[mi, ji]])
             for mi in range(m)
@@ -1543,16 +1666,11 @@ def save_ivfpq_index(
         ],
         "m int, code int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    # Cluster the layout write by cell: a bare partitionBy from an
-    # n-task frame sprays up to n files into EVERY cell directory
-    # (32 x 16 at the bench build — guide §6 small-files), while one
-    # shuffle keyed on the partition column lands one file per cell —
-    # the exact layout ivfpq_index_compact's maintenance pass exists
-    # to restore. Encoding stays scan-parallel (the fused UDF runs
-    # map-side, before the exchange). Cell row counts are bounded by
-    # the derive_ivf_cells sizing (~4·sqrt(n) cells → ~sqrt(n)/4 rows
-    # per cell), so one task per cell holds at scale; pair with
-    # maxRecordsPerFile if a skewed cell ever outgrows a file.
+    # One shuffle keyed on the partition column lands one file per
+    # cell (a bare partitionBy from an n-task frame sprays up to n
+    # files into EVERY cell directory); encoding stays map-side. Cells
+    # hold ~sqrt(n)/4 rows under derive_ivf_cells, so one task per
+    # cell holds at scale.
     assigned.repartition(len(cents), "cell").write.partitionBy(
         "cell"
     ).mode("overwrite").parquet(f"{path}/cells/add_id=0")
@@ -1561,18 +1679,8 @@ def save_ivfpq_index(
 def load_ivfpq_index(
     spark, path: str
 ) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    cents = np.zeros((len(crows), len(crows[0]["centroid"])))
-    for r in crows:
-        cents[r["cell"]] = r["centroid"]
-    brows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["m"] for r in brows)
-    k = 1 + max(r["code"] for r in brows)
-    books = np.zeros((m, k, len(brows[0]["centroid"])))
-    for r in brows:
-        books[r["m"], r["code"]] = r["centroid"]
-    cells = spark.read.parquet(f"{path}/cells").drop("add_id")
-    return cents, books, cells
+    idx = _load_index(spark, path)
+    return idx.cents, idx.books, idx.cells
 
 
 def ivfpq_index_topk(
@@ -1585,142 +1693,56 @@ def ivfpq_index_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     predicate: str | Column | None = None,
-    collect_shortlist: bool = True,
 ) -> DataFrame:
     """Three-stage search against a persisted IVFPQ index: partition
     pruning (n_probe cells), ADC shortlist over the code column, exact
-    re-rank of the shortlist. Query vectors are fetched by id, probe
-    cells and distance tables computed driver-side — bounded by the
-    request size, the ivf_index_topk shape. Plant containment is
-    structural end-to-end: an exact copy normalizes to the query's own
-    nearest cell (always probed), achieves the global-minimum ADC
-    among probed candidates, wins rounded ties by its smaller id, and
-    re-ranks to round(cos,6)=1.0.
+    re-rank of the shortlist. Models and postings come from the
+    resident handle (:func:`_load_index`), so a request on an
+    unchanged index runs no load job, only these:
+
+    1. fetch the query vectors by id; probe cells and ADC tables are
+       computed driver-side, bounded by the request size;
+    2. stage 1 (:func:`_adc_stage`): one Arrow pass over the probed
+       cells' (id, pq_code, cell) ranks each query against ITS OWN
+       probe cells (never a pooled union, so an answer does not depend
+       on what it was batched with), then a JVM window over the
+       per-task shortlists bounds it at n_queries x shortlist rows;
+    3. stage 2 (:func:`_rerank`): one scan fetches the shortlist's
+       vectors with ``cell IN (...) AND id IN (...)`` pushed down, and
+       the driver re-ranks them by round(cosine, 6).
+
+    The search runs eagerly; the returned frame holds the answer. Plant
+    containment is structural end-to-end: an exact copy normalizes to
+    the query's own nearest cell (always probed), achieves the
+    global-minimum ADC among probed candidates, wins rounded ties by
+    its smaller id, and re-ranks to round(cos,6)=1.0.
 
     ``predicate`` is FILTERED search (faiss IDSelector / vector-DB
     metadata filtering): a SQL expression (or Column) over the posting
-    columns — they're stored in the cell parquet next to the codes, so
-    the filter rides the SAME stage-1 scan as a pushed parquet
-    predicate and k fills post-filter (post-filtering an unfiltered
-    top-k would silently under-fill k). Stage 2 inherits it through
-    the shortlist: every re-ranked id already passed.
-
-    ``collect_shortlist`` picks the stage-1/stage-2 boundary:
-    True (default) collects the bounded (n_queries x shortlist) id list
-    to the driver so stage 2's full-precision fetch pushes an isin()
-    filter INTO the parquet scan — fewest bytes read, two driver-
-    synchronized jobs. False keeps the shortlist as a DataFrame join —
-    the whole search is ONE plannable job with no mid-query driver
-    sync, which is what makes stage 1's I/O contract plan-pinnable
-    (tests/test_pq.py); the cost is that stage 2 scans the probed
-    cells' float column and filters by join instead of by pushdown.
-    NOTE the lazy path does NOT remove the driver from the shortlist's
-    scaling story — the probe lists and query tables are still built
-    driver-side per request, so both paths assume request-sized
-    (queries x shortlist) state; the knob trades scan pushdown for
-    plannability, not driver memory.
-
-    ``n_probe=None`` sizes the probe budget to the loaded index's
-    cell count (:func:`derive_ivf_probe` — the ``ivf_index_topk``
-    contract, completing the derived-sizing plumbing on the composed
-    tier)."""
-    cents, books, cells = load_ivfpq_index(spark, path)
+    columns, pushed into the stage-1 scan, so k fills post-filter
+    (post-filtering an unfiltered top-k would under-fill k); stage 2
+    inherits it through the shortlist. ``n_probe=None`` sizes the
+    probe budget to the loaded cell count (:func:`derive_ivf_probe`).
+    """
+    idx = _load_index(spark, path)
     if n_probe is None:
-        n_probe = derive_ivf_probe(len(cents))
-    m_subspaces, n_codes, dsub = books.shape
-    qrows = (
-        cells.where(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
+        n_probe = derive_ivf_probe(len(idx.cents))
+    queries = _query_vectors(idx.cells, query_ids, id_col, vec_col)
+    probes = {
+        q: _probe_cells(qv, idx.cents, n_probe) for q, qv in queries.items()
+    }
+    probed = idx.cells.where(
+        _isin("cell", sorted({int(c) for p in probes.values() for c in p}))
     )
-    flat = _pq_query_rows(qrows, books, id_col, vec_col)
-    # Per-query probe cells: each query's candidate set is ITS OWN
-    # n_probe cells — joined on cell below, never pooled across the
-    # batched queries (a pooled union would make one query's answer
-    # depend on which other query_ids it was batched with, and grow
-    # stage-1 cost with the union instead of n_probe per query).
-    probes = []
-    for r in qrows:
-        qv = np.asarray(r[vec_col], dtype=np.float64)
-        nv = qv / (np.linalg.norm(qv) or 1.0)
-        probes.extend(
-            (int(r[id_col]), int(c))
-            for c in np.argsort(-(nv @ cents.T))[:n_probe]
-        )
-    q = tiny_df(
-        spark, flat, "query_id long, qv array<double>, dtable array<double>"
-    )
-    qcells = tiny_df(spark, probes, "query_id long, cell int")
-    all_cells = sorted({c for _, c in probes})
-    pruned = cells.where(
-        F.col("cell").isin(all_cells) & ~F.col(id_col).isin(query_ids)
-    )
-    pruned = _filtered(pruned, predicate)
-    # Stage 1 projects only (id, code, cell): the scan that touches
-    # every probed posting reads 4 bytes/vector (plus the filter's own
-    # metadata column when a predicate pushes down), not the float
-    # column; the (query, cell) join restricts each query to its own
-    # cells.
-    cand = pruned.select(
-        F.col(id_col).alias("neighbor_id"), "pq_code", "cell"
-    )
-    scored = (
-        cand.join(broadcast(qcells), "cell")
-        .join(broadcast(q), "query_id")
-        .withColumn("adc", _adc_expr(m_subspaces, n_codes))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    short_df = (
-        scored.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    if collect_shortlist:
-        # Stage 2: the shortlist is bounded (n_queries x shortlist), so
-        # its ids go back DOWN to the scan as an isin() filter — parquet
-        # reads shortlist-many full-precision rows (plus footers of the
-        # probed cells), not every probed posting.
-        short = short_df.collect()
-        short_ids = sorted({r["neighbor_id"] for r in short})
-        pairs = broadcast(
-            tiny_df(
-                spark,
-                [(r["query_id"], r["neighbor_id"]) for r in short],
-                "query_id long, neighbor_id long",
-            )
-        )
-        full = cells.where(
-            F.col("cell").isin(all_cells) & F.col(id_col).isin(short_ids)
-        )
-    else:
-        # Lazy stage 2: one plannable job — the shortlist stays a
-        # DataFrame joined to the full-precision fetch (the isin()
-        # pushdown is the price; the probed cells' float column is
-        # scanned and join-filtered instead). No broadcast hint: AQE
-        # sees the shortlist's true size at runtime and picks the
-        # strategy itself — request-sized shortlists broadcast anyway,
-        # bigger ones shuffle instead of being forced onto the driver.
-        pairs = short_df
-        full = cells.where(F.col("cell").isin(all_cells))
-    full = full.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    )
-    rescored = (
-        full.join(pairs, "neighbor_id")
-        .join(broadcast(q.select("query_id", "qv")), "query_id")
-        .withColumn("score", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    cand = _filtered(probed.where(~_isin(id_col, query_ids)), predicate)
+    short = _adc_stage(
+        cand.select(F.col(id_col).alias("neighbor_id"), "pq_code", "cell"),
+        idx.books,
+        queries,
+        shortlist,
+        probes,
+    ).toPandas()
+    return _rerank(probed, short, queries, k, id_col, vec_col)
 
 
 def ivfpq_index_add(
@@ -1733,40 +1755,25 @@ def ivfpq_index_add(
     """Incremental IVFPQ maintenance: encode + assign the new vectors
     under the SAVED models (no retraining — the ivf_index_add
     discipline) and write them into the batch's OWN epoch directory
-    ``cells/add_id=<k>/`` (mode=overwrite — deterministic, so a
-    replayed batch converges instead of duplicating; pass the
-    micro-batch id as ``add_id`` from a streaming sink, or leave None
-    to take the next free epoch — discovered from the partition
-    column through the Spark reader, so it works on any Hadoop
-    filesystem the index lives on, not just the driver's local disk;
-    epoch assignment assumes a single maintainer, the same
-    one-writer-per-index posture as ivf_index_add). Probing and both
-    search stages are unchanged; the appended postings carry their PQ
-    codes like the originals, so stage 1 still never reads a float
-    column. Add == rebuild under fixed models (pinned in
-    tests/test_pq.py). At scale the write covers only the batch's
-    cells — maintenance cost follows the BATCH, not the index."""
-    cents, books, cells = load_ivfpq_index(spark, path)
+    ``cells/add_id=<k>/`` (mode=overwrite, so a replayed batch
+    converges instead of duplicating). Pass the micro-batch id as
+    ``add_id`` from a streaming sink, or leave None to take the next
+    free epoch from the index handle's file listing (one maintainer
+    per index, like ivf_index_add). The new postings carry their PQ
+    codes, so stage 1 still never reads a float column; add == rebuild
+    under fixed models (tests/test_pq.py). The write covers only the
+    batch's cells — maintenance cost follows the BATCH."""
+    idx = _load_index(spark, path)
     if add_id is None:
-        latest = (
-            spark.read.parquet(f"{path}/cells")
-            .agg(F.max("add_id"))
-            .collect()[0][0]
-        )
-        add_id = 1 + int(latest or 0)
-    data_cols = [c for c in cells.columns if c not in ("cell", "pq_code")]
-    elem = cells.schema[vec_col].dataType.elementType.simpleString()
-    batch = new_vectors.select(*data_cols).withColumn(
-        vec_col, F.col(vec_col).cast(f"array<{elem}>")
-    )
-    # Fused assign+encode (see build_ivfpq_index): the batch's floats
-    # cross the Python boundary once, not once per model.
-    ae = _assign_encoder(cents, books)
+        epochs = [
+            int(m.group(1))
+            for sub, f, _ in idx.stamp
+            if sub == "cells" and (m := re.match(r"add_id=(\d+)/", f))
+        ]
+        add_id = 1 + max(epochs, default=0)
+    batch = _postings_like(idx.cells, new_vectors, vec_col)
     (
-        batch.withColumn("__ae", ae(F.col(vec_col)))
-        .withColumn("pq_code", F.col("__ae.pq_code"))
-        .withColumn("cell", F.col("__ae.cell"))
-        .drop("__ae")
+        _with_cell_code(batch, idx.cents, idx.books, vec_col)
         .write.partitionBy("cell")
         .mode("overwrite")
         .parquet(f"{path}/cells/add_id={add_id}")
@@ -1806,7 +1813,7 @@ def rotate_embeddings(
 
     @pandas_udf(T.ArrayType(T.DoubleType()))
     def rot(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.apply(lambda v: np.asarray(v, dtype=np.float64)))
+        m = _vectors(vs)
         return pd.Series(list(m @ rotation))
 
     return df.withColumn(vec_col, rot(F.col(vec_col)))
@@ -1829,24 +1836,14 @@ def _opq_cross_cov(
         # tasks x (dim^2+1) rows, removing the per-iteration shuffle.
         acc = np.zeros(dim * dim + 1)
         for pdf in batches:
-            m = np.stack(
-                pdf[vec_col].apply(
-                    lambda v: np.asarray(v, dtype=np.float64)
-                )
-            )
+            m = _vectors(pdf[vec_col])
             y = m @ rotation
             sub = y.reshape(len(m), m_subspaces, dsub)
             recon = np.empty_like(y)
             for mi in range(m_subspaces):
-                x = sub[:, mi, :]
                 c = books[mi]
-                d = (
-                    (x * x).sum(axis=1, keepdims=True)
-                    - 2.0 * (x @ c.T)
-                    + (c * c).sum(axis=1)
-                )
                 recon[:, mi * dsub : (mi + 1) * dsub] = c[
-                    np.argmin(d, axis=1)
+                    _nearest_code(sub[:, mi, :], c)
                 ]
             cov = m.T @ recon  # (dim, dim)
             resid = m - recon @ rotation.T
@@ -1955,7 +1952,5 @@ def ivfpq_index_compact(
     cents, cells, stats = _compact_core(
         cells, cents, retrain_imbalance, train_iters, vec_col
     )
-    # save_ivfpq_index owns the one-file-per-cell shuffle (r17: the
-    # base build writes the compacted layout too).
-    save_ivfpq_index(cents, books, cells, dest)
+    save_ivfpq_index(cents, books, cells, dest)  # one file per cell
     return stats

@@ -352,44 +352,6 @@ def test_ivfpq_results_independent_of_query_batching(
     assert alone == batched
 
 
-def test_ivfpq_stage2_pushes_shortlist_to_scan(spark, sf_dir, tmp_path):
-    """The rerank's I/O contract, pinned in the physical plan: the
-    returned DataFrame (stage 2 — stage 1 collected its bounded
-    shortlist eagerly) scans parquet with the shortlist ids pushed
-    down as In(vec_id, ...), so only shortlist-many full-precision
-    rows are read, and its ReadSchema prunes the pq_code column."""
-    from mora_spark.llm.simsearch import (
-        build_ivfpq_index,
-        ivfpq_index_topk,
-        save_ivfpq_index,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias(
-            "embedding"
-        ),
-    )
-    path = str(tmp_path / "idx")
-    save_ivfpq_index(
-        *build_ivfpq_index(e, n_cells=8, train_iters=1), path
-    )
-    df = ivfpq_index_topk(spark, path, query_ids=[0, 1], k=5, n_probe=2)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = df._jdf.queryExecution().explainString(mode)
-    pushed = [
-        ln for ln in plan.splitlines()
-        if "PushedFilters:" in ln and "In(vec_id" in ln
-    ]
-    assert pushed, f"shortlist ids not pushed to the scan:\n{plan[:1500]}"
-    schemas = [ln for ln in plan.splitlines() if "ReadSchema:" in ln]
-    assert schemas and all("pq_code" not in ln for ln in schemas), (
-        f"rerank scan did not prune pq_code:\n{schemas}"
-    )
-
-
 def _labeled(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -469,78 +431,275 @@ def test_filtered_pq_fills_k_post_filter(spark, sf_dir):
     assert any(by_id[r["neighbor_id"]] not in labels for r in unfiltered)
 
 
-def test_ivfpq_filtered_and_lazy_paths_agree(spark, sf_dir, tmp_path):
-    """The persisted-index filtered search honors the predicate, and
-    the lazy (one plannable job) stage-2 path returns exactly the
-    eager (collected shortlist, isin pushdown) answer — with and
-    without a predicate."""
-    from mora_spark.llm.simsearch import (
-        build_ivfpq_index,
-        ivfpq_index_topk,
-        save_ivfpq_index,
-    )
-
-    e = _labeled(spark, sf_dir)
-    path = str(tmp_path / "idx")
-    save_ivfpq_index(
-        *build_ivfpq_index(e, n_cells=8, train_iters=1), path
-    )
-    canon = lambda rows: sorted(
-        (r["query_id"], r["neighbor_id"], r["score"], r["rank"])
-        for r in rows
-    )
-    by_id = {r["vec_id"]: r["label"] for r in e.collect()}
-    for pred in (None, "label IN (1, 3, 5)"):
-        eager = ivfpq_index_topk(
-            spark, path, query_ids=[0, 1], k=5, n_probe=8,
-            predicate=pred,
-        ).collect()
-        lazy = ivfpq_index_topk(
-            spark, path, query_ids=[0, 1], k=5, n_probe=8,
-            predicate=pred, collect_shortlist=False,
-        ).collect()
-        assert canon(eager) == canon(lazy) and len(eager) == 10
-        if pred:
-            assert all(
-                by_id[r["neighbor_id"]] in (1, 3, 5) for r in eager
-            )
-
-
-def test_ivfpq_lazy_plan_pins_stage1_projection_and_filter(
-    spark, sf_dir, tmp_path
-):
-    """collect_shortlist=False makes the WHOLE search one plannable
-    job, so stage 1's I/O contract is pinnable: a parquet scan whose
-    ReadSchema carries pq_code but NOT the float column (the
-    4-bytes/vector candidate read), with the metadata predicate pushed
-    down to that same scan."""
-    from mora_spark.llm.simsearch import (
-        build_ivfpq_index,
-        ivfpq_index_topk,
-        save_ivfpq_index,
-    )
-
-    e = _labeled(spark, sf_dir)
-    path = str(tmp_path / "idx")
-    save_ivfpq_index(
-        *build_ivfpq_index(e, n_cells=8, train_iters=1), path
-    )
-    df = ivfpq_index_topk(
-        spark, path, query_ids=[0, 1], k=5, n_probe=2,
-        predicate="label IN (1, 3, 5)", collect_shortlist=False,
-    )
+def _plan(df) -> str:
+    spark = df.sparkSession
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    plan = df._jdf.queryExecution().explainString(mode)
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def test_ivfpq_stage_scans_pin_io_contracts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The two scans a filtered top-k runs carry its I/O contracts:
+    stage 1's ReadSchema has pq_code but NOT the float column (the
+    4-bytes/vector candidate read) with the label predicate pushed to
+    that scan; stage 2's fetch pushes the shortlist ids down as
+    In(vec_id, ...) and prunes pq_code."""
+    from mora_spark.llm import simsearch
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_topk,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    save_ivfpq_index(
+        *build_ivfpq_index(e, n_cells=8, train_iters=1), path
+    )
+    frames = {}
+
+    def spy(name):
+        real = getattr(simsearch, name)
+
+        def wrapped(*args, **kwargs):
+            frames[name] = real(*args, **kwargs)
+            return frames[name]
+
+        monkeypatch.setattr(simsearch, name, wrapped)
+
+    spy("_adc_stage")
+    spy("_fetch_rows")
+    got = ivfpq_index_topk(
+        spark, path, query_ids=[0, 1], k=5, n_probe=2,
+        predicate="label IN (1, 3, 5)",
+    ).collect()
+    assert len(got) == 10
+
+    plan = _plan(frames["_adc_stage"])
     schemas = [ln for ln in plan.splitlines() if "ReadSchema:" in ln]
-    stage1 = [
-        ln for ln in schemas
-        if "pq_code" in ln and "embedding" not in ln
+    assert schemas and all(
+        "pq_code" in ln and "embedding" not in ln for ln in schemas
+    ), f"stage 1 does not read codes only:\n{schemas}"
+    assert any(
+        "PushedFilters:" in ln and "In(label" in ln
+        for ln in plan.splitlines()
+    ), f"label predicate not pushed to the stage-1 scan:\n{plan[:1500]}"
+
+    plan = _plan(frames["_fetch_rows"])
+    assert any(
+        "PushedFilters:" in ln and "In(vec_id" in ln
+        for ln in plan.splitlines()
+    ), f"shortlist ids not pushed to the scan:\n{plan[:1500]}"
+    schemas = [ln for ln in plan.splitlines() if "ReadSchema:" in ln]
+    assert schemas and all("pq_code" not in ln for ln in schemas), (
+        f"rerank scan did not prune pq_code:\n{schemas}"
+    )
+
+
+def test_ivfpq_filtered_equals_exact_filtered_topk(spark, sf_dir, tmp_path):
+    """With every cell probed and a shortlist covering the corpus, the
+    persisted-index search is the exact top-k over the candidates that
+    pass the predicate (round-6 scores, id tie-breaks) — with and
+    without a predicate; every filtered neighbor satisfies it."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_topk,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    rows = e.collect()
+    path = str(tmp_path / "idx")
+    save_ivfpq_index(
+        *build_ivfpq_index(e, n_cells=8, train_iters=1), path
+    )
+    qrows = [r for r in rows if r["vec_id"] in (0, 1)]
+    all_labels = {r["label"] for r in rows}
+    for pred, labels in (
+        (None, all_labels),
+        ("label IN (1, 3, 5)", {1, 3, 5}),
+    ):
+        got = ivfpq_index_topk(
+            spark, path, query_ids=[0, 1], k=5, n_probe=8,
+            shortlist=len(rows) + 1, predicate=pred,
+        ).collect()
+        assert len(got) == 10
+        assert sorted(
+            (r["query_id"], r["neighbor_id"], r["score"], r["rank"])
+            for r in got
+        ) == _brute_filtered(rows, qrows, labels, 5)
+
+
+def _canon(df):
+    return sorted(
+        (r["query_id"], r["neighbor_id"], r["score"], r["rank"])
+        for r in df.collect()
+    )
+
+
+def _fresh_topk(spark, path, **kw):
+    """The answer of a process that never loaded ``path`` before."""
+    from mora_spark.llm import simsearch
+
+    simsearch._INDEX_CACHE.clear()
+    return _canon(simsearch.ivfpq_index_topk(spark, path, **kw))
+
+
+def test_ivfpq_handle_sees_add_after_cached_load(spark, sf_dir, tmp_path):
+    """An ivfpq_index_add after the index handle is cached is seen by
+    the next top-k in the same process."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_add,
+        ivfpq_index_topk,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    save_ivfpq_index(
+        *build_ivfpq_index(
+            e.where(F.col("vec_id") % 2 == 0), n_cells=8, train_iters=1
+        ),
+        path,
+    )
+    kw = dict(query_ids=[0, 2], k=5, n_probe=8)
+    before = _canon(ivfpq_index_topk(spark, path, **kw))
+    ivfpq_index_add(spark, path, e.where(F.col("vec_id") % 2 == 1))
+    after = _canon(ivfpq_index_topk(spark, path, **kw))
+    assert after != before
+    assert after == _fresh_topk(spark, path, **kw)
+
+
+def test_ivfpq_handle_sees_replayed_epoch_overwrite(spark, sf_dir, tmp_path):
+    """Re-running an add with the same add_id overwrites its epoch
+    directory; a handle cached before the replay must not serve the
+    replaced postings."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_add,
+        ivfpq_index_topk,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    save_ivfpq_index(
+        *build_ivfpq_index(
+            e.where(F.col("vec_id") % 3 == 0), n_cells=8, train_iters=1
+        ),
+        path,
+    )
+    kw = dict(query_ids=[0, 3], k=5, n_probe=8)
+    ivfpq_index_add(spark, path, e.where(F.col("vec_id") % 3 == 1), add_id=1)
+    first = _canon(ivfpq_index_topk(spark, path, **kw))
+    ivfpq_index_add(spark, path, e.where(F.col("vec_id") % 3 == 2), add_id=1)
+    replayed = _canon(ivfpq_index_topk(spark, path, **kw))
+    assert replayed != first
+    assert replayed == _fresh_topk(spark, path, **kw)
+
+
+def test_ivfpq_handle_sees_save_over_same_path(spark, sf_dir, tmp_path):
+    """save_ivfpq_index over a path whose handle is cached replaces the
+    models and postings the next top-k serves."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_topk,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    kw = dict(query_ids=[0, 1], k=5, n_probe=2)
+    save_ivfpq_index(
+        *build_ivfpq_index(
+            e.where(F.col("vec_id") < 250), n_cells=8, train_iters=1
+        ),
+        path,
+    )
+    first = _canon(ivfpq_index_topk(spark, path, **kw))
+    save_ivfpq_index(*build_ivfpq_index(e, n_cells=4, train_iters=1), path)
+    second = _canon(ivfpq_index_topk(spark, path, **kw))
+    assert second != first
+    assert second == _fresh_topk(spark, path, **kw)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivfpq_topk_on_unchanged_index_runs_no_load_job(
+    spark, sf_dir, tmp_path
+):
+    """The resident handle: once an index is loaded, reading it again
+    runs no Spark job while its files are unchanged, and a whole
+    top-k request (consumed with toPandas) stays at five jobs: query
+    fetch, the stage-1 pass and its shortlist reduce (a shuffle is its
+    own job under AQE), the stage-2 fetch, and the consumer's."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_topk,
+        load_ivfpq_index,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    save_ivfpq_index(
+        *build_ivfpq_index(e, n_cells=8, train_iters=1), path
+    )
+
+    def topk():
+        ivfpq_index_topk(
+            spark, path, query_ids=[0, 1], k=5, n_probe=2,
+            predicate="label IN (1, 3, 5)",
+        ).toPandas()
+
+    cold = _jobs(spark, topk)
+    assert _jobs(spark, lambda: load_ivfpq_index(spark, path)) == 0
+    warm = _jobs(spark, topk)
+    assert warm <= 5 < cold, (cold, warm)
+
+
+def test_round6_is_spark_round_half_up(spark):
+    """The kernels' rounding helper equals Spark's round(x, 6) bit for
+    bit, on HALF_UP ties of the decimal string (where rounding the
+    binary value, or half-to-even, differs) of both signs."""
+    from mora_spark.llm.simsearch import _round6
+
+    ties = [
+        5e-7, 2.5e-6, 1.0000005, 0.1234565, 0.9999995, 123.4567895,
+        1.5e-6, 4.5e-6, 0.0000125, 7.0000015,
     ]
-    assert stage1, f"no code-only stage-1 scan in plan:\n{schemas}"
-    pushed = [
-        ln for ln in plan.splitlines()
-        if "PushedFilters:" in ln and "In(label" in ln
+    rng = np.random.default_rng(7)
+    xs = (
+        ties
+        + [-t for t in ties]
+        + [0.0, -0.0, -1e-9, 1e-9, 0.5, -0.5]
+        + list(rng.normal(0, 3, 200))
+        + list(np.round(rng.normal(0, 3, 200), 7))
+    )
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(float(x),) for x in xs], "x double")
+        .select(F.round("x", 6))
+        .collect()
     ]
-    assert pushed, f"label predicate not pushed to a scan:\n{plan[:1500]}"
+    got = _round6(np.array(xs))
+    assert [repr(float(g)) for g in got] == [repr(w) for w in want]
+    # the crafted ties are ones a binary rounding gets wrong
+    naive = np.round(np.array(ties + [-t for t in ties]), 6)
+    assert any(a != b for a, b in zip(naive, want))
