@@ -439,14 +439,10 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def test_ivfpq_stage_scans_pin_io_contracts(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """The two scans a filtered top-k runs carry its I/O contracts:
-    stage 1's ReadSchema has pq_code but NOT the float column (the
-    4-bytes/vector candidate read) with the label predicate pushed to
-    that scan; stage 2's fetch pushes the shortlist ids down as
-    In(vec_id, ...) and prunes pq_code."""
+def _filtered_topk_frames(spark, sf_dir, tmp_path, monkeypatch) -> dict:
+    """Run one filtered top-k over a persisted index and return the
+    frames its two scans ran: ``_adc_stage`` (stage 1) and
+    ``_fetch_rows`` (the stage-2 shortlist fetch)."""
     from mora_spark.llm import simsearch
     from mora_spark.llm.simsearch import (
         build_ivfpq_index,
@@ -477,7 +473,16 @@ def test_ivfpq_stage_scans_pin_io_contracts(
         predicate="label IN (1, 3, 5)",
     ).collect()
     assert len(got) == 10
+    return frames
 
+
+def test_ivfpq_lazy_plan_pins_stage1_projection_and_filter(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Stage 1 of a filtered top-k reads codes only: its ReadSchema has
+    pq_code but NOT the float column (the 4-bytes/vector candidate
+    read), and the label predicate is pushed to that scan."""
+    frames = _filtered_topk_frames(spark, sf_dir, tmp_path, monkeypatch)
     plan = _plan(frames["_adc_stage"])
     schemas = [ln for ln in plan.splitlines() if "ReadSchema:" in ln]
     assert schemas and all(
@@ -488,6 +493,13 @@ def test_ivfpq_stage_scans_pin_io_contracts(
         for ln in plan.splitlines()
     ), f"label predicate not pushed to the stage-1 scan:\n{plan[:1500]}"
 
+
+def test_ivfpq_stage2_pushes_shortlist_to_scan(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Stage 2's fetch pushes the shortlist ids down as In(vec_id, ...)
+    and prunes pq_code."""
+    frames = _filtered_topk_frames(spark, sf_dir, tmp_path, monkeypatch)
     plan = _plan(frames["_fetch_rows"])
     assert any(
         "PushedFilters:" in ln and "In(vec_id" in ln

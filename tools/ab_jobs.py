@@ -93,15 +93,21 @@ def measure(spark, queries, sf_dir: str, names: list[str]) -> dict:
             for run_id in runs.run_ids:
                 jobs += st.getJobIdsForGroup(run_id)
             jobs += set(st.getJobIdsForGroup(None)) - ungrouped
+            # Stages come from the job's own stage-id list: once the
+            # session passes spark.ui.retainedStages the status store
+            # evicts stages (skipped ones first, having no completion
+            # time), so counting only the stages it still holds would
+            # undercount a long session's queries. Tasks are summed over
+            # the stages it still holds (reported, never asserted).
             n_stages = n_tasks = 0
             for j in jobs:
                 ji = st.getJobInfo(j)
                 if ji is None:
                     continue
+                n_stages += len(ji.stageIds)
                 for sid in ji.stageIds:
                     si = st.getStageInfo(sid)
                     if si is not None:
-                        n_stages += 1
                         n_tasks += si.numTasks
             out[name] = {
                 "jobs": len(jobs),
