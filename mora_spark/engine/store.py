@@ -119,24 +119,17 @@ def _utc(micros: int) -> dt.datetime:
     )
 
 
-def _parquet_ts_range(source, col: str = "ts") -> tuple[int, int]:
+def _parquet_ts_range(fs, path: str, col: str = "ts") -> tuple[int, int]:
     """(min, max) epoch micros of ``col`` from the parquet footer's
     row-group statistics — one driver-side footer read per staged
     file (the source of the manifest's file-level skipping stats).
-    ``source`` is a local path or a seekable file-like (the storefs
-    adapter's ``open_parquet`` — a HadoopInputFile for scheme roots).
+    ``fs`` is the store's storefs adapter, which reads the footer.
     pyarrow returns the stats of Spark's INT64 ``isAdjustedToUTC``
     column as aware UTC datetimes, so ``toInternal`` is exact.
     :data:`_NO_TS_STATS` when any row group lacks min/max for the
     column."""
     try:
-        import pyarrow.parquet as pq
-
-        try:
-            md = pq.ParquetFile(source).metadata
-        finally:
-            if hasattr(source, "close"):
-                source.close()
+        md = fs.parquet_metadata(path)
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         ci = names.index(col)
         lo = hi = None
@@ -153,20 +146,6 @@ def _parquet_ts_range(source, col: str = "ts") -> tuple[int, int]:
     except Exception:
         # stats are an optimization, never a correctness need
         return _NO_TS_STATS
-
-
-def _local(path: str) -> str:
-    """Strip a bare single-slash ``file:`` prefix (the non-URI spelling
-    some Hadoop tooling emits) so scheme-less roots run the direct
-    POSIX adapter. Full ``scheme://`` roots — ``file://`` included —
-    are NOT stripped: CandleStore routes them through the Hadoop
-    FileSystem seam (storefs), which is exactly how the in-container
-    tests exercise the remote-root code paths."""
-    if path.startswith("file://"):
-        return path
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    return path
 
 
 class _TxnLog:
@@ -474,8 +453,8 @@ class CandleStore:
         # session's Hadoop FileSystem (storefs seam); scheme-less (and
         # bare "file:" single-slash) roots keep the zero-overhead
         # POSIX path.
-        self.path = path if "://" in path else _local(path)
-        self._fs = store_fs(self.path)
+        self._fs = store_fs(path)
+        self.path = self._fs.norm(path)
         self.data_dir = os.path.join(self.path, "data")
         self._log = _TxnLog(self.path, self._fs)
         self._spec_path = os.path.join(self.path, "_bucket_spec.json")
@@ -660,7 +639,7 @@ class CandleStore:
             dest = os.path.join(self.data_dir, dest_rel)
             self._fs.makedirs(os.path.dirname(dest))
             self._fs.rename(os.path.join(staging, rel), dest)
-            lo, hi = _parquet_ts_range(self._fs.open_parquet(dest))
+            lo, hi = _parquet_ts_range(self._fs, dest)
             entries.append(
                 {"path": dest_rel, "partition": partition,
                  "ts_lo": lo, "ts_hi": hi}

@@ -1,20 +1,21 @@
-"""Driver-side filesystem seam for the store's manifest + metadata I/O.
+"""Driver-side filesystem seam: the library's one filesystem decision.
 
-The store's DATA moves through Spark (which already speaks every
-configured filesystem); what used to be POSIX-only was the driver-side
-metadata machinery around it — the manifest log's versions/pages/
-markers, the staging-file promotion, vacuum's orphan sweep, the
-bucketed-view layout. This module gives :class:`~.store._TxnLog` and
-:class:`~.store.CandleStore` one seam with two implementations:
+Bulk DATA moves through Spark, which already speaks every configured
+filesystem. What Spark does not do is the driver-side metadata I/O
+around it: the store's manifest log, staging promotion, vacuum sweep
+and bucket spec; the LSH family stamp next to a MinHash index; the
+IVF/IVFPQ index stamp; the Bloom filter's footer sizing; the streaming
+sinks' index-existence, listing and foreign-layout checks. Every one of
+them asks :func:`store_fs` for an adapter and goes through it, so no
+other module decides by the path's spelling. Two implementations:
 
-- :class:`PosixFS` — plain ``os``/``shutil`` calls, byte-identical to
-  the pre-seam behavior. Used for scheme-less roots (the default, and
-  the bench/driver path — zero py4j traffic).
-- :class:`HadoopFS` — the active session's Hadoop FileSystem via py4j
-  (the same route :mod:`mora_spark.sources.hadoopfs` gives the LSH
-  family metadata), used for ``scheme://`` roots so the manifest log
-  lands on the SAME filesystem as the parquet it describes. A
-  ``file://`` root is the in-container proxy for hdfs/s3a remotes.
+- :class:`PosixFS` — plain ``os``/``shutil`` calls. Used for
+  scheme-less roots (the default, and the bench/driver path — zero
+  py4j traffic).
+- :class:`HadoopFS` — the active session's Hadoop FileSystem via py4j,
+  used for ``scheme://`` roots so the metadata lands on the SAME
+  filesystem as the parquet it describes. A ``file://`` root is the
+  in-container proxy for hdfs/s3a remotes.
 
 The one semantic that differs per filesystem is the COMMIT POINT
 (:meth:`publish_cas`, reference WAL-before-apply analogue — see
@@ -42,13 +43,18 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 
 class PosixFS:
-    """``os``-backed implementation for scheme-less store roots."""
+    """``os``-backed implementation for scheme-less roots."""
 
     scheme = None
+
+    @staticmethod
+    def norm(p: str) -> str:
+        """``p`` with a bare single-slash ``file:`` prefix (the non-URI
+        spelling some Hadoop tooling emits) stripped."""
+        return p[len("file:"):] if p.startswith("file:") else p
 
     @staticmethod
     def exists(p: str) -> bool:
@@ -140,23 +146,50 @@ class PosixFS:
             shutil.copy2(src, dst)  # cross-device fallback
 
     @staticmethod
-    def open_parquet(p: str):
-        """A source ``pyarrow.parquet.ParquetFile`` accepts."""
-        return p
+    def parquet_metadata(p: str):
+        """The ``pyarrow`` footer metadata of the parquet file ``p``."""
+        import pyarrow.parquet as pq
+
+        return pq.ParquetFile(p).metadata
 
 
 class HadoopFS:
-    """Hadoop-FileSystem-backed implementation for ``scheme://`` store
-    roots, resolved once from the root through the active session's
-    Hadoop configuration. Every method takes full URI strings (the
-    store joins them with ``os.path.join``; Hadoop ``Path`` normalizes
-    the result)."""
+    """Hadoop-FileSystem-backed implementation for ``scheme://`` roots,
+    resolved once from the root through the active session's Hadoop
+    configuration. Every method takes full URI strings (callers join
+    them with ``os.path.join``; Hadoop ``Path`` normalizes the
+    result)."""
 
     def __init__(self, root: str):
-        from mora_spark.sources.hadoopfs import hadoop_fs
+        """Resolve ``root``'s FileSystem through the active session's
+        Hadoop configuration. Requires an active SparkSession: metadata
+        I/O without one means no Spark reader or writer exists either,
+        so the refusal is loud and early."""
+        from pyspark.sql import SparkSession
 
-        self._jvm, self._fs, _ = hadoop_fs(root)
+        # getActiveSession is THREAD-local: a concurrent writer thread
+        # (store CAS contention tests; any user thread pool) sees None
+        # even while the process has a live session — fall back to the
+        # process-wide instantiated session before refusing.
+        spark = SparkSession.getActiveSession() or getattr(
+            SparkSession, "_instantiatedSession", None
+        )
+        if spark is None:
+            raise RuntimeError(
+                f"Hadoop filesystem I/O on '{root}' needs an active "
+                "SparkSession to resolve the scheme's filesystem; create "
+                "the session first (local paths without a scheme never "
+                "take this route)"
+            )
+        self._jvm = spark._jvm
+        self._fs = self._p(root).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
         self.scheme = self._fs.getUri().getScheme()
+
+    @staticmethod
+    def norm(p: str) -> str:
+        return p
 
     def _p(self, p: str):
         return self._jvm.org.apache.hadoop.fs.Path(p)
@@ -325,21 +358,81 @@ class HadoopFS:
         ):
             raise OSError(f"copy failed: {src} -> {dst}")
 
-    def open_parquet(self, p: str):
-        from mora_spark.sources.hadoopfs import HadoopInputFile
+    def parquet_metadata(self, p: str):
+        import pyarrow.parquet as pq
 
-        return HadoopInputFile(p)
+        with _HadoopInputFile(self._jvm, self._fs, self._p(p)) as f:
+            return pq.ParquetFile(f).metadata
+
+
+class _HadoopInputFile:
+    """Seekable read-only file over a Hadoop FSDataInputStream, just
+    enough surface (read/seek/tell/close) for pyarrow's footer reader.
+    Bulk transfers go through one ``IOUtils.toByteArray`` JVM call per
+    ``read`` (commons-io ships with Spark), so a footer read is a
+    handful of py4j round-trips, never per-byte traffic."""
+
+    def __init__(self, jvm, fs, path):
+        self._jvm = jvm
+        self._in = fs.open(path)
+        self._len = fs.getFileStatus(path).getLen()
+        self._pos = 0
+        self.closed = False
+
+    def seek(self, offset: int, whence: int = 0) -> int:
+        if whence == 1:
+            offset += self._pos
+        elif whence == 2:
+            offset += self._len
+        self._pos = max(0, min(int(offset), self._len))
+        self._in.seek(self._pos)
+        return self._pos
+
+    def tell(self) -> int:
+        return self._pos
+
+    def size(self) -> int:
+        return self._len
+
+    def read(self, n: int = -1) -> bytes:
+        if n is None or n < 0:
+            n = self._len - self._pos
+        n = min(int(n), self._len - self._pos)
+        if n <= 0:
+            return b""
+        data = bytes(
+            self._jvm.org.apache.commons.io.IOUtils.toByteArray(
+                self._in, n
+            )
+        )
+        self._pos += len(data)
+        return data
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def writable(self) -> bool:
+        return False
+
+    def close(self) -> None:
+        if not self.closed:
+            self._in.close()
+            self.closed = True
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self.close()
 
 
 def store_fs(path: str):
-    """The right adapter for a store root: scheme-less roots keep the
+    """The adapter for ``path``: scheme-less roots (and the bare
+    single-slash ``file:`` spelling, see :meth:`PosixFS.norm`) keep the
     zero-overhead POSIX path; ``scheme://`` roots resolve the Hadoop
     FileSystem once (``file://`` included — that's how the in-container
     tests exercise this layer as the hdfs/s3a proxy)."""
     return HadoopFS(path) if "://" in path else PosixFS()
-
-
-def tmp_name(base: str) -> str:
-    """A collision-free temp sibling for ``base`` (same directory, so
-    rename/link stays same-filesystem and same-permission-domain)."""
-    return f"{base}.tmp-{uuid.uuid4().hex[:12]}"

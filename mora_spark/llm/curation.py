@@ -362,47 +362,24 @@ def bloom_footer_keys_bound(path: str, text_col: str = "text") -> int:
     rows) can too — undersizing there drifts the FP rate up (extra
     verify work, never wrong rows, since every candidate is
     exact-verified); pass ``n_keys_hint`` explicitly for such
-    layouts. ``scheme://`` roots (file://, hdfs://, s3a://, ...) are
-    listed and footer-read through the session's Hadoop FileSystem
-    (:mod:`mora_spark.sources.hadoopfs` — the same route the LSH
-    family metadata takes), still zero Spark jobs; a root with no
-    parquet files raises rather than returning a bound that would
-    size a saturated one-word filter."""
-    import glob as _glob
+    layouts. Listing and footer reads go through the storefs seam, so
+    ``scheme://`` roots (file://, hdfs://, s3a://, ...) are read
+    through the session's Hadoop FileSystem, still zero Spark JOBS:
+    footers are a handful of driver-side reads, never a scan. A root
+    with no parquet files raises rather than returning a bound that
+    would size a saturated one-word filter."""
+    from mora_spark.engine.storefs import store_fs
 
-    import pyarrow.parquet as pq
-
-    # scheme:// roots (file://, hdfs://, s3a://, ...) are listed and
-    # footer-read through the session's Hadoop FileSystem — the same
-    # route the LSH family metadata takes — still zero Spark JOBS:
-    # footers are a handful of driver-side reads, never a scan.
-    if "://" in path:
-        from mora_spark.sources.hadoopfs import HadoopInputFile, list_files
-
-        try:
-            listed = list_files(path, ".parquet")
-        except FileNotFoundError:
-            listed = []
-
-        def _footers():
-            for p, _len in listed:
-                with HadoopInputFile(p) as f:
-                    yield pq.read_metadata(f)
-
-        footers = _footers()
-    else:
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else sorted(
-                _glob.glob(
-                    os.path.join(path, "**", "*.parquet"), recursive=True
-                )
-            )
+    fs = store_fs(path)
+    if fs.isdir(path):
+        files = sorted(
+            os.path.join(path, rel)
+            for rel, _ in fs.walk_files(path)
+            if rel.endswith(".parquet")
         )
-        listed = files
-        footers = (pq.read_metadata(f) for f in files)
-    if not listed:
+    else:
+        files = [path] if fs.exists(path) else []
+    if not files:
         raise FileNotFoundError(
             f"bloom_footer_keys_bound: no parquet files under "
             f"'{path}' — check the path (or supply n_keys_hint)"
@@ -410,7 +387,7 @@ def bloom_footer_keys_bound(path: str, text_col: str = "text") -> int:
     rows = 0
     tbytes = 0
     matched = False
-    for md in footers:
+    for md in map(fs.parquet_metadata, files):
         rows += md.num_rows
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
@@ -455,7 +432,6 @@ def decontaminate_bloom(
     n: int = 8,
     bits_per_key: int = 16,
     n_keys_hint: int | None = None,
-    transport: str = "auto",
 ) -> DataFrame:
     """:func:`decontaminate` with a Bloom-filter pre-pass — the 100 TB
     shape of benchmark decontamination. Answer IDENTICAL to
@@ -480,14 +456,13 @@ def decontaminate_bloom(
     cheap even as a shuffle join. The bitset is built distributed
     (groupBy word index + ``bit_or``), collected once (bounded by
     m/64 words, never corpus rows), and shipped back by one of two
-    ``transport`` modes: ``"frame"`` — a ONE-ROW broadcast frame
-    whose array the JVM join-condition probe reads as an attribute,
-    never as a plan literal (see the inline note for the measured
-    cliffs) — or ``"pandas_udf"`` — a sparkContext broadcast variable
-    probed by a numpy ``mapInPandas`` filter, for bitsets too large
-    for a single Arrow cell (~10⁸ benchmark shingles and up).
-    ``"auto"`` (default) picks by bitset size at
-    ``_BLOOM_FRAME_WORDS_MAX``. The UDF path keeps the EXPENSIVE hash
+    transports, picked by bitset size at ``_BLOOM_FRAME_WORDS_MAX``: a
+    ONE-ROW broadcast frame whose array the JVM join-condition probe
+    reads as an attribute, never as a plan literal (see the inline
+    note for the measured cliffs), or — for bitsets too large for a
+    single Arrow cell (~10⁸ benchmark shingles and up) — a
+    sparkContext broadcast variable probed by a numpy ``mapInPandas``
+    filter. The UDF path keeps the EXPENSIVE hash
     JVM-side (``xxhash64`` as a projected column); Python does only
     the Kirsch-Mitzenmacher integer probe math on that int64 — numpy
     ``%``/``>>`` match Spark's ``pmod``/``shiftright`` exactly on
@@ -516,11 +491,6 @@ def decontaminate_bloom(
     production case where the eval suite is a persisted table. A
     caller looping over many corpora against one benchmark DataFrame
     should persist it so the remaining passes are cache reads."""
-    if transport not in ("auto", "frame", "pandas_udf"):
-        raise ValueError(
-            f"decontaminate_bloom: unknown transport {transport!r} "
-            "(expected 'auto', 'frame' or 'pandas_udf')"
-        )
     if isinstance(benchmark, str):
         if n_keys_hint is None:
             n_keys_hint = bloom_footer_keys_bound(benchmark, text_col)
@@ -558,10 +528,7 @@ def decontaminate_bloom(
     t_sh = _doc_shingles(
         train, [F.col(id_col).alias("train_id")], text_col, n
     )
-    use_udf = transport == "pandas_udf" or (
-        transport == "auto" and len(words) > _BLOOM_FRAME_WORDS_MAX
-    )
-    if use_udf:
+    if len(words) > _BLOOM_FRAME_WORDS_MAX:
         cand = _bloom_filter_pandas(spark, t_sh, words, m_bits, k)
     else:
         cand = _bloom_filter_frame(spark, t_sh, words, m_bits, k)
@@ -665,11 +632,7 @@ def _bloom_filter_pandas(spark, t_sh, words, m_bits: int, k: int):
     # accumulates executor copies (r15 probe: ~3x degradation by the
     # third retained 272 MB bitset). Unpersist is safe mid-plan — an
     # executor needing an unpersisted block re-fetches it.
-    while _BLOOM_BROADCASTS:
-        try:
-            _BLOOM_BROADCASTS.pop().unpersist(False)
-        except Exception:
-            pass  # a stopped context has already freed everything
+    clear_bloom_broadcasts()
     _BLOOM_BROADCASTS.append(bc)
     out_schema = t_sh.schema
     cols = [f.name for f in out_schema.fields]

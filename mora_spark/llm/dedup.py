@@ -744,20 +744,6 @@ def _band_keys_local(
     ]
 
 
-def _hadoop_fs(path: str):
-    """(jvm, fs, root Path) for a ``scheme://`` index root — so the
-    family JSON lands on the SAME filesystem Spark writes the parquet
-    tables to (hdfs://, s3a://, file://, ...), never in a spurious
-    driver-local directory that a later load on another machine would
-    miss (the silent wrong-family failure the metadata exists to
-    prevent; until r14 these helpers refused every remote scheme
-    outright instead). Shared with the Bloom footer sizing via
-    :mod:`mora_spark.sources.hadoopfs`."""
-    from mora_spark.sources.hadoopfs import hadoop_fs
-
-    return hadoop_fs(path)
-
-
 def write_minhash_family(
     path: str, band_size: int, n_bands: int
 ) -> None:
@@ -767,60 +753,38 @@ def write_minhash_family(
     ``batch_id=`` parquet subdirs itself instead of going through
     ``save`` — can stamp its sink-owned index too.
 
-    Local (scheme-less) roots use plain POSIX I/O with an
-    ``os.replace`` publish; ``scheme://`` roots go through the Hadoop
-    FileSystem of the active session: write ``.tmp``, then rename
-    FIRST (no pre-delete — on HDFS rename is atomic and only returns
-    False when the destination exists, so a fresh stamp never opens a
-    no-file window) and fall back to delete+rename only to OVERWRITE
-    an existing stamp. That restamp window is the one remaining gap
-    (r15 ADVICE: a load racing the delete sees no file), and
-    :func:`load_minhash_family` closes it from the read side by
-    treating missing-file-with-``.tmp``-sibling as transient. On
-    object stores rename is additionally copy+delete — acceptable for
-    a build-once metadata stamp whose half-written file fails JSON
-    parsing loudly rather than resolving to a wrong family."""
+    The stamp goes through the :mod:`~mora_spark.engine.storefs` seam,
+    so on a ``scheme://`` root it lands on the same filesystem Spark
+    writes the parquet tables to (hdfs://, s3a://, file://, ...), never
+    in a driver-local directory that a later load on another machine
+    would miss. Publish is write ``.tmp`` then ``replace``: on HDFS
+    that renames FIRST (atomic, no no-file window for a fresh stamp)
+    and falls back to delete+rename only to OVERWRITE an existing
+    stamp. That restamp window is closed from the read side:
+    :func:`load_minhash_family` treats missing-file-with-``.tmp``-
+    sibling as transient. On object stores rename is additionally
+    copy+delete — acceptable for a build-once metadata stamp whose
+    half-written file fails JSON parsing loudly rather than resolving
+    to a wrong family."""
     import json
     import os
 
-    payload = json.dumps(
-        {
-            "band_size": band_size,
-            "n_bands": n_bands,
-            "n_hashes": band_size * n_bands,
-        }
-    )
-    if "://" in path:
-        jvm, fs, root = _hadoop_fs(path)
-        fs.mkdirs(root)
-        tmp = jvm.org.apache.hadoop.fs.Path(
-            root, LSH_FAMILY_FILE + ".tmp"
-        )
-        dst = jvm.org.apache.hadoop.fs.Path(root, LSH_FAMILY_FILE)
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
-        # Rename-first: on a fresh stamp (the common case) the file
-        # appears atomically with full content — no delete window at
-        # all. FileSystem.rename returns False when dst exists (it
-        # never overwrites), so only a RESTAMP pays the delete+rename
-        # window, which load_minhash_family treats as transient while
-        # the .tmp sibling is visible.
-        if not fs.rename(tmp, dst):
-            fs.delete(dst, False)
-            if not fs.rename(tmp, dst):
-                raise OSError(
-                    f"write_minhash_family: publish rename failed for "
-                    f"'{path}/{LSH_FAMILY_FILE}'"
-                )
-        return
-    os.makedirs(path, exist_ok=True)
+    from mora_spark.engine.storefs import store_fs
+
+    fs = store_fs(path)
     tmp = os.path.join(path, LSH_FAMILY_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, os.path.join(path, LSH_FAMILY_FILE))
+    fs.makedirs(path)
+    fs.write_file(
+        tmp,
+        json.dumps(
+            {
+                "band_size": band_size,
+                "n_bands": n_bands,
+                "n_hashes": band_size * n_bands,
+            }
+        ),
+    )
+    fs.replace(tmp, os.path.join(path, LSH_FAMILY_FILE))
 
 
 def load_minhash_family(path: str) -> tuple[int, int]:
@@ -829,57 +793,36 @@ def load_minhash_family(path: str) -> tuple[int, int]:
     was persisted (or foreign plain-parquet layouts) carry no file and
     resolve to the fixed module constants — exactly what every writer
     used before the metadata existed, so the fallback is correct for
-    every legacy index, never a guess. ``scheme://`` roots read
-    through the active session's Hadoop FileSystem (same route as
-    :func:`write_minhash_family`), so the metadata travels with the
-    index wherever the parquet lives."""
+    every legacy index, never a guess. Read through the storefs seam
+    (same route as :func:`write_minhash_family`), so the metadata
+    travels with the index wherever the parquet lives."""
     import json
     import os
+    import time
 
-    if "://" in path:
-        import time
+    from mora_spark.engine.storefs import store_fs
 
-        jvm, fs, root = _hadoop_fs(path)
-        meta = jvm.org.apache.hadoop.fs.Path(root, LSH_FAMILY_FILE)
-        tmp = jvm.org.apache.hadoop.fs.Path(
-            root, LSH_FAMILY_FILE + ".tmp"
-        )
-        # A restamp's delete+rename publish (HDFS route) has a brief
-        # no-file window; resolving it to the legacy default would be
-        # exactly the silent wrong-family failure the metadata
-        # prevents. The window is identifiable — the writer's .tmp
-        # sibling is visible during it — so missing+tmp is retried as
-        # transient before concluding "legacy index, no stamp".
-        for _ in range(20):
-            if fs.exists(meta):
-                break
-            if not fs.exists(tmp):
-                return (BAND_SIZE, N_HASHES // BAND_SIZE)
-            time.sleep(0.05)
-        else:
-            raise OSError(
-                f"load_minhash_family: '{path}/{LSH_FAMILY_FILE}' "
-                f"absent but its .tmp sibling persists — a publish "
-                f"appears stalled or torn; refusing to silently fall "
-                f"back to the default family"
-            )
-        stream = fs.open(meta)
-        try:
-            # commons-io (ships with every Spark distro) instead of
-            # InputStream.readAllBytes: the latter is Java 9+ only and
-            # breaks on Java 8 Spark deployments (r15 ADVICE #3).
-            raw = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        d = json.loads(raw.decode("utf-8"))
-        return (int(d["band_size"]), int(d["n_bands"]))
+    fs = store_fs(path)
     meta = os.path.join(path, LSH_FAMILY_FILE)
-    if not os.path.exists(meta):
-        return (BAND_SIZE, N_HASHES // BAND_SIZE)
-    with open(meta) as f:
-        d = json.load(f)
+    # A restamp's delete+rename publish (HDFS route) has a brief
+    # no-file window; resolving it to the legacy default would be
+    # exactly the silent wrong-family failure the metadata prevents.
+    # The window is identifiable — the writer's .tmp sibling is visible
+    # during it — so missing+tmp is retried as transient before
+    # concluding "legacy index, no stamp".
+    for _ in range(20):
+        if fs.exists(meta):
+            break
+        if not fs.exists(meta + ".tmp"):
+            return (BAND_SIZE, N_HASHES // BAND_SIZE)
+        time.sleep(0.05)
+    else:
+        raise OSError(
+            f"load_minhash_family: '{meta}' absent but its .tmp "
+            f"sibling persists — a publish appears stalled or torn; "
+            f"refusing to silently fall back to the default family"
+        )
+    d = json.loads(fs.read_text(meta))
     return (int(d["band_size"]), int(d["n_bands"]))
 
 

@@ -804,6 +804,14 @@ def _cell_assigner(cents: np.ndarray):
 
 
 def _save_centroids(spark, cents: np.ndarray, path: str) -> None:
+    """Write the centroid table and clear ``cells/`` for the postings
+    write that follows. A save replaces the whole index: an overwrite
+    of ``cells`` alone would keep IVFPQ's ``add_id>=1`` epochs, and the
+    session's dynamic partition overwrite keeps every cell directory
+    the new index leaves empty."""
+    from mora_spark.engine.storefs import store_fs
+
+    store_fs(path).rmtree(f"{path}/cells")
     tiny_df(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -837,7 +845,7 @@ def save_ivf_index(
 
 
 class _Index(NamedTuple):
-    stamp: tuple  # sorted (subdir, relative file, length)
+    stamp: tuple  # sorted (subdir, relative file, mtime)
     cents: np.ndarray
     books: np.ndarray | None  # None for a plain IVF index
     cells: DataFrame  # postings, without IVFPQ's add_id epoch column
@@ -849,27 +857,18 @@ _INDEX_LOCK = threading.Lock()
 
 
 def _index_stamp(path: str) -> tuple:
-    """Sorted ``(subdir, relative file, length)`` listing of an index's
-    model and posting files (``sources.hadoopfs`` for ``scheme://``
-    roots)."""
-    out = []
-    for sub in ("centroids", "codebooks", "cells"):
-        root = f"{path}/{sub}"
-        if "://" in path:
-            from mora_spark.sources.hadoopfs import list_files
+    """Sorted ``(subdir, relative file, mtime)`` listing of an index's
+    model and posting files, through the storefs seam."""
+    from mora_spark.engine.storefs import store_fs
 
-            try:
-                files = list_files(root, "")
-            except FileNotFoundError:
-                continue
-            out += [(sub, f.rsplit(f"/{sub}/", 1)[-1], n) for f, n in files]
-        else:
-            for d, _, names in os.walk(root):
-                for f in (os.path.join(d, n) for n in names):
-                    out.append(
-                        (sub, os.path.relpath(f, root), os.path.getsize(f))
-                    )
-    return tuple(sorted(out))
+    fs = store_fs(path)
+    return tuple(
+        sorted(
+            (sub, rel, mtime)
+            for sub in ("centroids", "codebooks", "cells")
+            for rel, mtime in fs.walk_files(f"{path}/{sub}")
+        )
+    )
 
 
 def _load_index(spark, path: str) -> _Index:
@@ -1007,12 +1006,23 @@ def ivf_index_compact(
     so scaled duplicates keep landing in their source vector's cell
     and probe recall survives a retrain (tests/test_simsearch.py).
     Returns the health stats observed plus whether it retrained."""
+    _refuse_in_place(path, dest)
     cents, assigned = load_ivf_index(spark, path)
     cents, assigned, stats = _compact_core(
         assigned, cents, retrain_imbalance, train_iters, vec_col
     )
     save_ivf_index(cents, assigned, dest)  # one file per cell
     return stats
+
+
+def _refuse_in_place(path: str, dest: str) -> None:
+    """A save clears ``dest``'s postings before it writes the ones it
+    reads from ``path``, so compacting onto the source would delete
+    the index it is compacting."""
+    if os.path.normpath(dest) == os.path.normpath(path):
+        raise ValueError(
+            f"dest {dest!r} must differ from the compacted index {path!r}"
+        )
 
 
 def _compact_core(
@@ -1948,6 +1958,7 @@ def ivfpq_index_compact(
     Writes to ``dest`` (never in place) so readers of ``path`` stay
     consistent mid-compaction. Returns health stats + whether the
     retrain branch ran."""
+    _refuse_in_place(path, dest)
     cents, books, cells = load_ivfpq_index(spark, path)
     cents, cells, stats = _compact_core(
         cells, cents, retrain_imbalance, train_iters, vec_col

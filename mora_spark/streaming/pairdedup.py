@@ -43,6 +43,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mora_spark.engine.storefs import store_fs
+
 
 def dedup_pairs_batch(
     spark: SparkSession,
@@ -76,7 +78,7 @@ def dedup_pairs_batch(
     localCheckpoint comment above)."""
     state_b = state_b.persist()
     try:
-        if os.path.exists(index_dir):
+        if store_fs(index_dir).exists(index_dir):
             kept = (
                 spark.read.parquet(index_dir)
                 .where(F.col("batch_id") < batch_id)

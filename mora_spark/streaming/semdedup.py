@@ -45,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mora_spark.engine.storefs import store_fs
 from mora_spark.llm.simsearch import embedding_neardup_pairs
 from mora_spark.streaming.pairdedup import dedup_pairs_batch
 
@@ -139,10 +140,11 @@ def stream_semantic_dedup(
     # batch's own snapshot, which IS the pre-batch count — replay
     # converges to the same derivation.
     running = {"kept": None}
+    fs = store_fs(index_dir)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         if n_bits is None and running["kept"] is None:
-            if os.path.exists(index_dir):
+            if fs.exists(index_dir):
                 running["kept"] = (
                     spark.read.parquet(index_dir)
                     .where(F.col("batch_id") < batch_id)

@@ -62,10 +62,12 @@ from pyspark.sql import functions as F
 
 
 class TextIndex(NamedTuple):
-    """A text sink's dedup state: its own index root, the banding
-    family, and the seed index's ``(bands, groups)`` or None."""
+    """A text sink's dedup state: its own index root, the root's
+    storefs adapter, the banding family, and the seed index's
+    ``(bands, groups)`` or None."""
 
     path: str
+    fs: object
     family: tuple[int, int]
     seed: tuple[DataFrame, DataFrame] | None
 
@@ -91,6 +93,7 @@ def open_text_index(
     """Resolve and stamp the banding family of ``work_dir``'s sink-owned
     index, load the seed, and refuse a foreign layout or a family
     conflict (see the module docstring)."""
+    from mora_spark.engine.storefs import store_fs
     from mora_spark.llm.dedup import (
         load_minhash_family,
         load_minhash_index,
@@ -98,11 +101,12 @@ def open_text_index(
     )
 
     path = os.path.join(work_dir, "lsh_index")
+    fs = store_fs(path)
     for table in ("bands", "groups"):
         d = os.path.join(path, table)
         foreign = sorted(
             n
-            for n in (os.listdir(d) if os.path.isdir(d) else ())
+            for n in fs.listdir(d)
             if not n.startswith(("batch_id=", "_", "."))
         )
         if foreign:
@@ -117,7 +121,7 @@ def open_text_index(
         family = own_family
     else:
         family = load_minhash_family(seed_index_path)
-        if os.path.isdir(os.path.join(path, "groups")) and own_family != family:
+        if fs.isdir(os.path.join(path, "groups")) and own_family != family:
             raise ValueError(
                 f"{caller}: seed index family {family} conflicts with "
                 f"the existing sink-owned index's family {own_family} "
@@ -131,7 +135,7 @@ def open_text_index(
         if seed_index_path is not None
         else None
     )
-    return TextIndex(path, family, seed)
+    return TextIndex(path, fs, family, seed)
 
 
 def batch_table(docs: DataFrame, family: tuple[int, int]) -> DataFrame:
@@ -194,7 +198,7 @@ def dedup_text_batch(
     )
     indexes = [index.seed] if index.seed is not None else []
     own = [os.path.join(index.path, t) for t in ("bands", "groups")]
-    if all(map(os.path.isdir, own)):
+    if all(map(index.fs.isdir, own)):
         # The fixed schema skips a per-batch schema-inference job.
         bands, groups = load_minhash_index(
             spark,

@@ -522,17 +522,21 @@ def test_derive_bloom_params():
     assert m1 == 64 and k1 >= 1
 
 
-def test_bloom_pandas_udf_transport_same_answer(spark, sf_dir):
+def test_bloom_pandas_udf_transport_same_answer(spark, sf_dir, monkeypatch):
     # The big-bitset transport (broadcast variable + numpy mapInPandas
     # probe) must flag the identical set: the JVM keeps the xxhash64,
     # Python replays only the integer probe math, and numpy %/>> on
     # int64 match pmod/shiftright — asserted here against both the
     # exact operator and the frame transport. Also: mapInPandas is
-    # narrow, so this path too adds no shuffle vs the exact plan.
-    from mora_spark.llm.curation import decontaminate_bloom
+    # narrow, so this path too adds no shuffle vs the exact plan. The
+    # UDF path is forced by shrinking the size boundary (the transport
+    # is picked when the plan is built).
+    import mora_spark.llm.curation as cur
 
     train, bench = _decon_frames(spark, sf_dir)
-    udf = decontaminate_bloom(train, bench, n=8, transport="pandas_udf")
+    with monkeypatch.context() as mp:
+        mp.setattr(cur, "_BLOOM_FRAME_WORDS_MAX", 1)
+        udf = cur.decontaminate_bloom(train, bench, n=8)
 
     def shuffles(df):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -553,9 +557,7 @@ def test_bloom_pandas_udf_transport_same_answer(spark, sf_dir):
     assert got == want
     frame = {
         (r.doc_id, r.n_hits)
-        for r in decontaminate_bloom(
-            train, bench, n=8, transport="frame"
-        ).collect()
+        for r in cur.decontaminate_bloom(train, bench, n=8).collect()
     }
     assert got == frame
 

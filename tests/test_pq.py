@@ -639,6 +639,62 @@ def test_ivfpq_handle_sees_save_over_same_path(spark, sf_dir, tmp_path):
     assert second == _fresh_topk(spark, path, **kw)
 
 
+def test_ivfpq_handle_sees_add_on_file_scheme(spark, sf_dir, tmp_path):
+    """The handle's stamp lists a ``file://`` index through the storefs
+    seam, so an add there is seen by the next top-k too."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_add,
+        ivfpq_index_topk,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = f"file://{tmp_path}/idx"
+    save_ivfpq_index(
+        *build_ivfpq_index(
+            e.where(F.col("vec_id") % 2 == 0), n_cells=8, train_iters=1
+        ),
+        path,
+    )
+    kw = dict(query_ids=[0, 2], k=5, n_probe=8)
+    before = _canon(ivfpq_index_topk(spark, path, **kw))
+    ivfpq_index_add(spark, path, e.where(F.col("vec_id") % 2 == 1))
+    after = _canon(ivfpq_index_topk(spark, path, **kw))
+    assert after != before
+    assert after == _fresh_topk(spark, path, **kw)
+
+
+def test_save_ivfpq_index_over_grown_index_replaces_postings(
+    spark, sf_dir, tmp_path
+):
+    """A save replaces the whole index: the ``add_id>=1`` epochs of the
+    index it overwrites (postings encoded under the old models) go."""
+    from mora_spark.llm.simsearch import (
+        build_ivfpq_index,
+        ivfpq_index_add,
+        load_ivfpq_index,
+        save_ivfpq_index,
+    )
+
+    e = _labeled(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    save_ivfpq_index(
+        *build_ivfpq_index(
+            e.where(F.col("vec_id") % 2 == 0), n_cells=8, train_iters=1
+        ),
+        path,
+    )
+    ivfpq_index_add(spark, path, e.where(F.col("vec_id") % 2 == 1))
+    small = e.where(F.col("vec_id") % 5 == 0)
+    save_ivfpq_index(*build_ivfpq_index(small, n_cells=4, train_iters=1), path)
+    want = sorted(r.vec_id for r in small.select("vec_id").collect())
+    on_disk = spark.read.parquet(f"{path}/cells").select("vec_id")
+    assert sorted(r.vec_id for r in on_disk.collect()) == want
+    _, _, cells = load_ivfpq_index(spark, path)
+    assert sorted(r.vec_id for r in cells.select("vec_id").collect()) == want
+
+
 def _jobs(spark, fn) -> int:
     """Spark jobs ``fn()`` runs, counted through a job group."""
     import uuid

@@ -1,20 +1,23 @@
-"""CandleStore over a ``scheme://`` root (r15 verdict next #2).
+"""The library over ``scheme://`` roots (r15 verdict next #2).
 
 A ``file://`` root is the in-container proxy for hdfs://s3a remotes:
-every driver-side metadata operation — manifest versions, pages,
-checkpoint marker, retention markers, staging promotion, vacuum,
-bucket spec — must route through the session's Hadoop FileSystem
-(storefs.HadoopFS) instead of silently using POSIX paths that would
-land on the DRIVER's disk for a real remote. The commit point stays a
-true CAS per filesystem (link(2) for the local scheme, fail-if-exists
-rename on HDFS, loud refusal on object stores)."""
+every driver-side metadata operation — the store's manifest versions,
+pages, checkpoint marker, retention markers, staging promotion,
+vacuum, bucket spec, and the streaming dedup sinks' index checks —
+must route through the storefs seam (storefs.HadoopFS) instead of
+silently using POSIX paths that would land on, or look at, the
+DRIVER's disk for a real remote. The commit point stays a true CAS per
+filesystem (link(2) for the local scheme, fail-if-exists rename on
+HDFS, loud refusal on object stores)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import pathlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from mora_spark.engine import CandleStore
 from mora_spark.engine.storefs import HadoopFS, PosixFS, store_fs
@@ -226,3 +229,117 @@ def test_maintenance_lifecycle_uri_root(spark, tmp_path):
     with pytest.raises(Exception, match="expired"):
         s.read(version=1)
     assert s.read().count() == 4
+
+
+def test_no_scheme_branch_outside_storefs():
+    """``storefs.store_fs`` is the library's one filesystem decision:
+    no other module branches on a path's ``"://"`` spelling, and
+    nothing imports the removed ``mora_spark.sources.hadoopfs``."""
+    import mora_spark
+
+    root = pathlib.Path(mora_spark.__file__).parent
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        text = f.read_text()
+        if rel != "engine/storefs.py" and (
+            '"://"' in text or "'://'" in text
+        ):
+            offenders.append((rel, "scheme branch"))
+        if "sources.hadoopfs" in text or "import hadoopfs" in text:
+            offenders.append((rel, "hadoopfs import"))
+    assert offenders == []
+
+
+_WORDS = [
+    "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
+    "kilo lima mike november oscar papa quebec romeo sierra tango",
+    "uniform victor whiskey xray yankee zulu amber basalt cobalt dune",
+    "ember fjord granite harbor iris jasper kelp lagoon marble nectar",
+]
+
+
+def _two_batches(spark):
+    """Batch 0 holds docs 0-2; batch 1 holds doc 3, an exact copy of
+    batch 0's doc 1, and doc 4, new text."""
+    text = {0: _WORDS[0], 1: _WORDS[1], 2: _WORDS[2], 3: _WORDS[1],
+            4: _WORDS[3]}
+    return [
+        spark.createDataFrame(
+            [(i, text[i]) for i in ids], "doc_id long, text string"
+        )
+        for ids in ((0, 1, 2), (3, 4))
+    ]
+
+
+def _roots(tmp_path):
+    return [str(tmp_path / "local"), f"file://{tmp_path}/uri"]
+
+
+def test_dedup_pairs_batch_same_pairs_on_file_scheme(spark, tmp_path):
+    """The media/semantic sinks' step finds batch 1's copy of a kept
+    batch-0 doc on a ``file://`` root exactly as on a local one: the
+    index-existence check goes through the seam, not os.path."""
+    from mora_spark.streaming.pairdedup import dedup_pairs_batch
+
+    def exact_pairs(state):
+        a = state.select(F.col("doc_id").alias("id_a"), "text")
+        b = state.select(F.col("doc_id").alias("id_b"), "text")
+        return (
+            a.join(b, "text")
+            .where("id_a < id_b")
+            .select("id_a", "id_b", F.lit(1.0).alias("score"))
+        )
+
+    got = []
+    for root in _roots(tmp_path):
+        for batch_id, batch in enumerate(_two_batches(spark)):
+            dedup_pairs_batch(
+                spark, batch, batch_id, f"{root}/index", f"{root}/pairs",
+                exact_pairs, "doc_id", "score",
+            )
+        got.append(
+            sorted(
+                (r.doc_id, r.dup_id, r.src)
+                for r in spark.read.parquet(
+                    f"{root}/pairs/batch_id=1"
+                ).collect()
+            )
+        )
+    assert got == [[(3, 1, "corpus")]] * 2
+
+
+def test_dedup_text_batch_same_pairs_on_file_scheme(spark, tmp_path):
+    """The text sinks' step (stream_curate_jsonl, stream_dedup_increment)
+    sees its own earlier batches on a ``file://`` root."""
+    from mora_spark.streaming.textdedup import (
+        dedup_text_batch,
+        open_text_index,
+    )
+
+    got = []
+    for root in _roots(tmp_path):
+        index = open_text_index(spark, root, None, "test")
+        pairs_of = {}
+        for batch_id, batch in enumerate(_two_batches(spark)):
+            dedup_text_batch(
+                spark, batch, batch_id, index, 0.8,
+                lambda pairs, dropped, b=batch_id: [
+                    lambda: pairs_of.__setitem__(b, pairs.collect())
+                ],
+            )
+        got.append(sorted((r.doc_id, r.dup_id, r.src) for r in pairs_of[1]))
+    assert got == [[(3, 1, "corpus")]] * 2
+
+
+def test_open_text_index_refuses_foreign_layout_on_file_scheme(
+    spark, tmp_path
+):
+    """A foreign ``lsh_index/bands`` layout under a ``file://`` work_dir
+    is refused, as it is under a local one."""
+    from mora_spark.streaming.textdedup import open_text_index
+
+    (tmp_path / "lsh_index" / "bands" / "shard=0").mkdir(parents=True)
+    for work_dir in (str(tmp_path), f"file://{tmp_path}"):
+        with pytest.raises(ValueError, match="batch_id= layout"):
+            open_text_index(spark, work_dir, None, "test")
